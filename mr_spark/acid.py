@@ -1218,6 +1218,17 @@ class SnapshotTable:
 
         Anything else re-raises ConflictError, exactly Delta's rule
         (blind appends almost never conflict; overlapping merges do).
+
+        ``assemble`` (built by :meth:`_commit_files`) applies ONE file-map
+        rule to whichever manifest it is given: remove the named data
+        files (read from ``m0``), APPEND the new files to their buckets,
+        attach the named deletion vectors. Appending — never replacing a
+        bucket's list — is what keeps a rebase sound: after a partition-
+        spec evolution a rewrite MIGRATES rows to the current default
+        spec, so new files can land in a live bucket the write never
+        read (not in ``touched``), and a concurrent commit may have
+        added files there that replacing the list would silently drop.
+
         ``batch_id``/``app_id`` replay tags are re-checked against the
         rebased manifest so two handles replaying one micro-batch can
         race safely. ``last_commit_retries`` records how many rebases
@@ -1268,6 +1279,73 @@ class SnapshotTable:
                             f"concurrent commit changed deletion vectors in "
                             f"bucket {b}, which this write read"
                         ) from None
+
+    def _commit_files(
+        self,
+        m0: dict,
+        base0: int,
+        *,
+        remove=(),
+        add: dict | None = None,
+        stats: dict | None = None,
+        dv: tuple[str, list[str]] | None = None,
+        identity: dict | None = None,
+        evolved: dict | None = None,
+        hook=None,
+        op: dict | None = None,
+        touched: list | None = None,
+        batch_id: int | None = None,
+        app_id: str = "default",
+        max_retries: int = 3,
+    ) -> int:
+        """Commit one manifest delta through :meth:`_commit_rebased`:
+        drop the ``remove`` data files, append ``add`` ({bucket: [rels]})
+        with their footer ``stats`` (stats of carried files may be
+        refreshed the same way), and attach ``dv`` = (sidecar rel, [data
+        files it names]). ``identity`` is an allocating write's advanced
+        high-water mark; ``evolved`` is the schema-evolved manifest the
+        new files were written under (see :meth:`_evolved`), whose schema
+        and colmap the successor adopts; ``hook(mb, nxt)`` sets a commit's
+        non-file manifest fields. Stats and deletion vectors follow their
+        files through :meth:`_next_manifest`."""
+        remove = set(remove)
+        add = add or {}
+
+        def successor(mb: dict) -> dict:
+            files = {}
+            for b, rels in mb["files"].items():
+                kept = [r for r in rels if r not in remove]
+                if kept:
+                    files[b] = kept
+            for b, rels in add.items():
+                files[b] = files.get(b, []) + rels
+            dvs = None
+            if dv is not None:
+                dv_rel, named = dv
+                dvs = dict(mb.get("dvs", {}))
+                for rel in named:
+                    dvs[rel] = dvs.get(rel, []) + [dv_rel]
+            nxt = self._next_manifest(
+                mb, files, stats, batch_id, app_id, dvs=dvs, identity=identity
+            )
+            if evolved is not None:
+                nxt["schema"] = evolved["schema"]
+                if evolved.get("colmap"):
+                    nxt["colmap"] = evolved["colmap"]
+            if hook is not None:
+                hook(mb, nxt)
+            return nxt
+
+        return self._commit_rebased(
+            m0,
+            base0,
+            successor,
+            op=op,
+            touched=touched,
+            batch_id=batch_id,
+            app_id=app_id,
+            max_retries=max_retries,
+        )
 
     def _commit(
         self, manifest: dict, base_version: int, op: dict | None = None
@@ -1398,12 +1476,7 @@ class SnapshotTable:
         )
 
     def _write_bucket_files(
-        self,
-        df: DataFrame,
-        bloom_cols: tuple[str, ...] = (),
-        arranged: bool = False,
-        colmap: dict | None = None,
-        partition_by: str | None = None,
+        self, df: DataFrame, m: dict, arranged: bool = False
     ) -> tuple[dict[str, list[str]], dict[str, dict]]:
         """Write df (which carries a __bucket column) as one immutable
         parquet file set per bucket; returns ({bucket: [relative paths]},
@@ -1418,18 +1491,19 @@ class SnapshotTable:
         frame (e.g. compact(zorder_by=...)'s range partitioning) — the
         default hash repartition would destroy that layout.
 
-        ``colmap`` renames the frame's LOGICAL columns to their PHYSICAL
-        in-file names just before the write (a narrow projection —
-        preserves any arranged layout); ``bloom_cols`` must then be the
-        PHYSICAL names.
-
-        ``partition_by`` (the table's partition column, for composite
-        "<pval>|<hash>" bucket ids) routes each file into its partition's
-        DIRECTORY — data/<col>=<value>/<uuid>.parquet — so the on-disk
-        layout is one directory per partition value (Delta's partitioned
-        layout), while the manifest stays the single source of truth."""
+        ``m`` is the manifest the files are written under. Its colmap
+        renames the frame's LOGICAL columns to their PHYSICAL in-file
+        names just before the write (a narrow projection — preserves any
+        arranged layout); its bloom columns get per-file blooms in the
+        stats; a partitioned default spec (composite "<pval>|<hash>"
+        bucket ids) routes each file into its partition's DIRECTORY —
+        data/<field>=<value>/<uuid>.parquet — so the on-disk layout is
+        one directory per partition value (Delta's partitioned layout),
+        while the manifest stays the single source of truth."""
         from urllib.parse import quote, unquote
 
+        colmap = self._colmap(m)
+        partition_by = self._pdir_field(m)
         if colmap:
             df = df.select(
                 *[
@@ -1488,7 +1562,7 @@ class SnapshotTable:
                 list(ex.map(lambda t: os.rename(t[0], t[1]), renames))
         shutil.rmtree(staging)
         stats = self._collect_stats(
-            [(rel, dst) for _, dst, rel in renames], bloom_cols
+            [(rel, dst) for _, dst, rel in renames], self._bloom_cols_phys(m)
         )
         return out, stats
 
@@ -1609,7 +1683,12 @@ class SnapshotTable:
             # a frame omitting a generated column gets it computed here,
             # which also fixes the column's TYPE in the v1 schema
             df = t._apply_generated({"generated": generated}, df)
-        pseudo = {"key": key, "n_buckets": n_buckets, "partition_by": partition_by}
+        pseudo = {
+            "key": key,
+            "n_buckets": n_buckets,
+            "partition_by": partition_by,
+            "bloom_cols": list(bloom_cols or ()),
+        }
         if partition_by:
             if partition_by == key:
                 raise ValueError(
@@ -1625,9 +1704,7 @@ class SnapshotTable:
             )
         try:
             files, stats = t._write_bucket_files(
-                df.withColumn("__bucket", t._bucket_expr(pseudo)),
-                tuple(bloom_cols or ()),
-                partition_by=partition_by,
+                df.withColumn("__bucket", t._bucket_expr(pseudo)), pseudo
             )
             manifest = {
                 "key": key,
@@ -1917,6 +1994,31 @@ class SnapshotTable:
                         "require a rewrite, not a keyed write"
                     )
         return source, table_schema, added
+
+    def _evolved(self, m: dict, added: list) -> dict:
+        """``m`` with the ``added`` fields appended to its schema — the
+        manifest a schema-evolving write lays its new files out under
+        (``m`` itself when nothing is added). Column mapping: an added
+        name whose physical slot is already taken — by a live column's
+        physical name or by a DROPPED column's tombstone — gets a FRESH
+        physical name, so re-adding a dropped column can never resurrect
+        the old bytes still sitting in un-rewritten files."""
+        if not added:
+            return m
+        from pyspark.sql.types import StructType
+
+        table_schema = StructType.fromJson(json.loads(m["schema"]))
+        cmap = dict(self._colmap(m))
+        used_phys = {
+            cmap.get(f.name, f.name) for f in table_schema.fields
+        } | set(m.get("phys_tombstones", []))
+        for f in added:
+            if f.name in used_phys:
+                cmap[f.name] = f"{f.name}_{uuid.uuid4().hex[:8]}"
+        out = dict(m, schema=StructType(table_schema.fields + added).json())
+        if cmap:
+            out["colmap"] = cmap
+        return out
 
     # ---- value partitioning helpers ---------------------------------------
 
@@ -3003,10 +3105,7 @@ class SnapshotTable:
             ],
             m,
         ).withColumn("__bucket", self._bucket_expr(m, n_buckets))
-        new_files, new_stats = self._write_bucket_files(
-            rows, self._bloom_cols_phys(m), colmap=self._colmap(m),
-            partition_by=self._pdir_field(m),
-        )
+        new_files, new_stats = self._write_bucket_files(rows, m)
         nxt = self._next_manifest(m, new_files, new_stats, dvs={})
         nxt["n_buckets"] = n_buckets
         return self._commit(nxt, base, op={"operation": "REBUCKET", "n_buckets": n_buckets})
@@ -3140,10 +3239,7 @@ class SnapshotTable:
         if sid == m.get("default_spec_id", 0) and m.get("partition_specs"):
             return base  # already the default spec — no-op
 
-        def assemble(mb: dict) -> dict:
-            nxt = self._next_manifest(
-                mb, {b: list(r) for b, r in mb["files"].items()}, {}
-            )
+        def assemble(mb: dict, nxt: dict) -> None:
             nxt["partition_specs"] = specs
             if sid:
                 nxt["default_spec_id"] = sid
@@ -3153,12 +3249,11 @@ class SnapshotTable:
                 nxt["partition_by"] = col
             else:
                 nxt.pop("partition_by", None)
-            return nxt
 
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            hook=assemble,
             op={
                 "operation": "SET PARTITION SPEC",
                 "column": col,
@@ -3225,12 +3320,10 @@ class SnapshotTable:
         self._check_constraints(m, df)
         self._check_partition_values(m, df)
         new_files, new_stats = self._write_bucket_files(
-            df.withColumn("__bucket", self._bucket_expr(m)),
-            self._bloom_cols_phys(m),
-            colmap=self._colmap(m),
-            partition_by=self._pdir_field(m),
+            df.withColumn("__bucket", self._bucket_expr(m)), m
         )
-        def assemble(mb: dict) -> dict:
+
+        def assemble(mb: dict, nxt: dict) -> None:
             # a concurrent COPY INTO may have loaded some of OUR files —
             # committing their rows again would double-load; that race
             # cannot rebase (the staged data files mix overlapping and
@@ -3240,17 +3333,14 @@ class SnapshotTable:
                     "concurrent COPY INTO loaded an overlapping source "
                     "file — re-run to load only the remainder"
                 )
-            files = {b: list(rels) for b, rels in mb["files"].items()}
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            nxt = self._next_manifest(mb, files, new_stats)
             nxt["copy_ledger"] = list(mb.get("copy_ledger", [])) + todo
-            return nxt
 
-        v = self._commit_rebased(
+        v = self._commit_files(
             m,
             base,
-            assemble,
+            add=new_files,
+            stats=new_stats,
+            hook=assemble,
             op={
                 "operation": "COPY INTO",
                 "loaded": len(todo),
@@ -3673,12 +3763,10 @@ class SnapshotTable:
         recorded = self._txns(m).get(app_id)
         if batch_id is not None and recorded is not None and recorded >= batch_id:
             return base  # replayed micro-batch: already committed
-        key, n_buckets = m["key"], m["n_buckets"]
-        from pyspark.sql.types import StructType
-
+        key = m["key"]
         # type alignment BEFORE __bucket (lossless upcasts; mismatches
         # raise) — see _align_source_types for why this must come first
-        source, table_schema, added = self._align_source_types(m, source)
+        source, _, added = self._align_source_types(m, source)
         # an omitted write-default column fills here — the merge's
         # full-row-replace contract then carries the default into both
         # matched and inserted rows (an EXPLICIT source NULL stays NULL)
@@ -3715,11 +3803,7 @@ class SnapshotTable:
         affected = self._affected_buckets(
             m, [str(r["__bucket"]) for r in bucket_rows]
         )
-        old_files = [
-            os.path.join(self.path, rel)
-            for b in affected
-            for rel in m["files"].get(b, [])
-        ]
+        old_rels = [rel for b in affected for rel in m["files"].get(b, [])]
         if added and not merge_schema:
             raise ValueError(
                 f"merge_upsert source has columns not in the table schema: "
@@ -3727,16 +3811,7 @@ class SnapshotTable:
                 "(Delta's autoMerge) or evolve with "
                 "append(merge_schema=True) first"
             )
-        # fresh physical slots for evolved names whose slot is taken by a
-        # live column or a dropped column's tombstone (append's rule)
-        cmap = dict(self._colmap(m))
-        if added:
-            used_phys = {
-                cmap.get(f.name, f.name) for f in table_schema.fields
-            } | set(m.get("phys_tombstones", []))
-            for f in added:
-                if f.name in used_phys:
-                    cmap[f.name] = f"{f.name}_{uuid.uuid4().hex[:8]}"
+        evolved = self._evolved(m, added)
         self._check_constraints(m, source)
         ident_col = next(iter(m["identity"])) if m.get("identity") else None
         new_hw = None
@@ -3746,8 +3821,8 @@ class SnapshotTable:
                 f"column {ident_col!r} is GENERATED ALWAYS AS IDENTITY — "
                 "merge sources cannot provide its values"
             )
-        if old_files:
-            target = self._read_files(old_files, m)
+        if old_rels:
+            target = self._read_files([self._entry_full(r) for r in old_rels], m)
             keep = target.join(
                 src.select(key).distinct(), key, "left_anti"
             )
@@ -3805,37 +3880,17 @@ class SnapshotTable:
                 merged = src
         merged = self._recompute_generated(m, merged)
         try:
-            new_files, new_stats = self._write_bucket_files(
-                merged, self._bloom_cols_phys(m), colmap=cmap,
-                partition_by=self._pdir_field(m),
-            )
+            new_files, new_stats = self._write_bucket_files(merged, evolved)
         finally:
             release()
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels
-                for b, rels in mb["files"].items()
-                if b not in set(affected)
-            }
-            files.update(new_files)
-            nxt = self._next_manifest(
-                mb,
-                files,
-                new_stats,
-                batch_id,
-                app_id,
-                identity={ident_col: new_hw} if new_hw is not None else None,
-            )
-            if added:
-                nxt["schema"] = StructType(table_schema.fields + added).json()
-                if cmap:
-                    nxt["colmap"] = cmap
-            return nxt
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=old_rels,
+            add=new_files,
+            stats=new_stats,
+            identity={ident_col: new_hw} if new_hw is not None else None,
+            evolved=evolved,
             op={
                 "operation": "MERGE",
                 "clauses": ["upsert"],
@@ -4075,12 +4130,8 @@ class SnapshotTable:
             affected = self._affected_buckets(
                 m, [str(r["__bucket"]) for r in bucket_rows]
             )
-        old_files = [
-            os.path.join(self.path, rel)
-            for b in affected
-            for rel in m["files"].get(b, [])
-        ]
-        target = self._read_files(old_files, m)
+        old_rels = [rel for b in affected for rel in m["files"].get(b, [])]
+        target = self._read_files([self._entry_full(r) for r in old_rels], m)
         t_row = target.select(
             F.col(join_key).alias("__tk"),
             F.struct(*[F.col(c) for c in target.columns]).alias("t"),
@@ -4215,23 +4266,11 @@ class SnapshotTable:
         try:
             self._check_constraints(m, merged)
             new_files, new_stats = self._write_bucket_files(
-                merged.withColumn("__bucket", self._bucket_expr(m)),
-                self._bloom_cols_phys(m),
-                colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
+                merged.withColumn("__bucket", self._bucket_expr(m)), m
             )
         finally:
             if multi_pass:
                 merged.unpersist()
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels
-                for b, rels in mb["files"].items()
-                if b not in set(affected)
-            }
-            files.update(new_files)
-            return self._next_manifest(mb, files, new_stats, batch_id, app_id)
-
         # by-source clauses READ every target row, so the conflict check
         # must cover every POSSIBLE bucket — a concurrent append creating
         # a brand-new bucket holds rows this merge never examined (the
@@ -4247,10 +4286,12 @@ class SnapshotTable:
         # would slip past the touched check. Disable the auto-rebase
         # entirely there: any version race re-raises ConflictError.
         no_rebase = full_read and bool(m.get("partition_by"))
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=old_rels,
+            add=new_files,
+            stats=new_stats,
             op={"operation": "MERGE", "clauses": clause_names},
             touched=read_set,
             batch_id=batch_id,
@@ -4315,51 +4356,23 @@ class SnapshotTable:
         self._check_partition_values(m, df)
         df, new_hw, release = self._with_identity(m, df)
         ident_col = next(iter(m["identity"])) if m.get("identity") else None
-        # column mapping: an added logical name whose physical slot is
-        # already taken — by a live column's physical name or by a
-        # DROPPED column's tombstone — gets a FRESH physical name, so
-        # re-adding a dropped column can never resurrect the old bytes
-        # still sitting in un-rewritten files
-        cmap = dict(self._colmap(m))
-        if added:
-            used_phys = {
-                cmap.get(f.name, f.name) for f in table_schema.fields
-            } | set(m.get("phys_tombstones", []))
-            for f in added:
-                if f.name in used_phys:
-                    cmap[f.name] = f"{f.name}_{uuid.uuid4().hex[:8]}"
+        evolved = self._evolved(m, added)
         try:
             new_files, new_stats = self._write_bucket_files(
-                df.withColumn("__bucket", self._bucket_expr(m)),
-                self._bloom_cols_phys(m),
-                colmap=cmap,
-                partition_by=self._pdir_field(m),
+                df.withColumn("__bucket", self._bucket_expr(m)), evolved
             )
         finally:
             release()
-        def assemble(mb: dict) -> dict:
-            files = {b: list(rels) for b, rels in mb["files"].items()}
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            nxt = self._next_manifest(
-                mb,
-                files,
-                new_stats,
-                identity={ident_col: new_hw} if new_hw is not None else None,
-            )
-            if added:
-                nxt["schema"] = StructType(table_schema.fields + added).json()
-                if cmap:
-                    nxt["colmap"] = cmap
-            return nxt
-
         # a blind append is purely ADDITIVE (touched=None): it read no
         # table data, so it commutes with ANY concurrent data commit and
         # rebases across it — Delta's appends-never-conflict rule
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            add=new_files,
+            stats=new_stats,
+            identity={ident_col: new_hw} if new_hw is not None else None,
+            evolved=evolved,
             op={"operation": "APPEND", "schema_evolved": bool(added)},
         )
 
@@ -4425,44 +4438,26 @@ class SnapshotTable:
         ident_col = next(iter(m["identity"])) if m.get("identity") else None
         try:
             new_files, new_stats = self._write_bucket_files(
-                df.withColumn("__bucket", self._bucket_expr(m)),
-                self._bloom_cols_phys(m),
-                colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
+                df.withColumn("__bucket", self._bucket_expr(m)), m
             )
         finally:
             release()
         # drop only the files THIS SNAPSHOT holds (like delete(None)):
         # a file added concurrently to an untouched bucket is not ours
         # to replace and survives the rebase
-        dropped = {rel for rels in m["files"].values() for rel in rels}
+        dropped = [rel for rels in m["files"].values() for rel in rels]
         self.last_dml = {
             "files_fully_removed": len(dropped),
             "files_added": sum(len(r) for r in new_files.values()),
             "files_rewritten": 0,
         }
-
-        def assemble(mb: dict) -> dict:
-            files = {}
-            for b, rels in mb["files"].items():
-                kept = [r for r in rels if r not in dropped]
-                if kept:
-                    files[b] = kept
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            return self._next_manifest(
-                mb,
-                files,
-                new_stats,
-                batch_id,
-                app_id,
-                identity={ident_col: new_hw} if new_hw is not None else None,
-            )
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=dropped,
+            add=new_files,
+            stats=new_stats,
+            identity={ident_col: new_hw} if new_hw is not None else None,
             op={"operation": "OVERWRITE", "metrics": dict(self.last_dml)},
             touched=sorted(set(m["files"]) | set(new_files)),
             batch_id=batch_id,
@@ -4608,18 +4603,12 @@ class SnapshotTable:
         if not victims:
             return base  # nothing referenced under that value — no-op
 
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels for b, rels in mb["files"].items() if b not in set(victims)
-            }
-            return self._next_manifest(mb, files, {})
-
         # touched=victims: a concurrent rewrite ADDING rows to the
         # partition must not be silently dropped by a rebase
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=[rel for b in victims for rel in m["files"][b]],
             op={
                 "operation": "DROP PARTITION",
                 "column": m["partition_by"],
@@ -4710,35 +4699,17 @@ class SnapshotTable:
         ident_col = next(iter(m["identity"])) if m.get("identity") else None
         try:
             new_files, new_stats = self._write_bucket_files(
-                df.withColumn("__bucket", self._bucket_expr(m)),
-                self._bloom_cols_phys(m),
-                colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
+                df.withColumn("__bucket", self._bucket_expr(m)), m
             )
         finally:
             release()
-
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels
-                for b, rels in mb["files"].items()
-                if b not in set(victims)
-            }
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            return self._next_manifest(
-                mb,
-                files,
-                new_stats,
-                batch_id,
-                app_id,
-                identity={ident_col: new_hw} if new_hw is not None else None,
-            )
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=[rel for b in victims for rel in m["files"][b]],
+            add=new_files,
+            stats=new_stats,
+            identity={ident_col: new_hw} if new_hw is not None else None,
             op={"operation": "REPLACE WHERE", "column": p, "value": sval},
             touched=sorted(set(victims) | set(new_files)),
             batch_id=batch_id,
@@ -4933,37 +4904,22 @@ class SnapshotTable:
             m,
             [str(r["__bucket"]) for r in k.select("__bucket").distinct().collect()],
         )
-        old_files = [
-            os.path.join(self.path, rel)
-            for b in affected
-            for rel in m["files"].get(b, [])
-        ]
-        if old_files:
+        old_rels = [rel for b in affected for rel in m["files"].get(b, [])]
+        if old_rels:
             remaining = (
-                self._read_files(old_files, m)
+                self._read_files([self._entry_full(r) for r in old_rels], m)
                 .join(k.drop("__bucket"), key, "left_anti")
                 .withColumn("__bucket", self._bucket_expr(m))
             )
-            new_files, new_stats = self._write_bucket_files(
-                remaining, self._bloom_cols_phys(m), colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
-            )
+            new_files, new_stats = self._write_bucket_files(remaining, m)
         else:
             new_files, new_stats = {}, {}
-
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels
-                for b, rels in mb["files"].items()
-                if b not in set(affected)
-            }
-            files.update(new_files)
-            return self._next_manifest(mb, files, new_stats)
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=old_rels,
+            add=new_files,
+            stats=new_stats,
             op={"operation": "DELETE", "mode": "cow"},
             touched=affected,
         )
@@ -5026,26 +4982,16 @@ class SnapshotTable:
             os.remove(os.path.join(self.path, dv_rel))
             return base
 
-        def assemble(mb: dict) -> dict:
-            # re-derive from the (possibly rebased) manifest: OTHER
-            # buckets' DV state may have changed; ours is conflict-checked.
-            # Attach only to files the sidecar actually names — a
-            # zero-victim file carrying a DV reference would pay the
-            # anti-join on every read and flag its bucket for an
-            # unnecessary purge rewrite at the next OPTIMIZE (ADVICE r7)
-            dvs_b = dict(mb.get("dvs", {}))
-            for rel in rels:
-                if os.path.basename(rel) in dv_victims:
-                    dvs_b[rel] = dvs_b.get(rel, []) + [dv_rel]
-            return self._next_manifest(mb, dict(mb["files"]), {}, dvs=dvs_b)
-
-        # touched = the buckets whose files this DV scan read: a
-        # concurrent rewrite of (or DV attach to) those files would make
-        # the recorded (file, pos) pairs stale
-        return self._commit_rebased(
+        # attach only to files the sidecar actually names — a zero-victim
+        # file carrying a DV reference would pay the anti-join on every
+        # read and flag its bucket for an unnecessary purge rewrite at
+        # the next OPTIMIZE (ADVICE r7). touched = the buckets whose
+        # files this DV scan read: a concurrent rewrite of (or DV attach
+        # to) those files would make the recorded (file, pos) pairs stale
+        return self._commit_files(
             m,
             base,
-            assemble,
+            dv=(dv_rel, [r for r in rels if os.path.basename(r) in dv_victims]),
             op={"operation": "DELETE", "mode": "dv"},
             touched=affected,
         )
@@ -5307,25 +5253,16 @@ class SnapshotTable:
             # DELETE FROM t: drop every file THIS SNAPSHOT holds —
             # manifest metadata only (a concurrently-appended file is
             # not ours to delete and survives the rebase, Delta's rule)
-            dropped = {rel for rels in m["files"].values() for rel in rels}
+            dropped = [rel for rels in m["files"].values() for rel in rels]
             self.last_dml = {
                 "files_fully_removed": len(dropped),
                 "files_rewritten": 0,
                 "files_untouched": 0,
             }
-
-            def assemble(mb: dict) -> dict:
-                files = {}
-                for b, rels in mb["files"].items():
-                    kept = [r for r in rels if r not in dropped]
-                    if kept:
-                        files[b] = kept
-                return self._next_manifest(mb, files)
-
-            return self._commit_rebased(
+            return self._commit_files(
                 m,
                 base,
-                assemble,
+                remove=dropped,
                 op={
                     "operation": "DELETE",
                     "mode": "metadata",
@@ -5380,25 +5317,14 @@ class SnapshotTable:
                 "rows_deleted_by_dv": n_dead,
             }
 
-            def assemble_dv(mb: dict) -> dict:
-                files = {}
-                for b, rels in mb["files"].items():
-                    kept = [r for r in rels if r not in full_rels]
-                    if kept:
-                        files[b] = kept
-                dvs_b = dict(mb.get("dvs", {}))
-                if dv_rel is not None:
-                    # only files the sidecar actually names: advisory
-                    # straddlers with zero victims stay DV-free
-                    for rel in straddle_rels:
-                        if os.path.basename(rel) in dv_victims:
-                            dvs_b[rel] = dvs_b.get(rel, []) + [dv_rel]
-                return self._next_manifest(mb, files, {}, dvs=dvs_b)
-
-            return self._commit_rebased(
+            # only files the sidecar actually names: advisory straddlers
+            # with zero victims stay DV-free
+            named = [r for r in straddle_rels if os.path.basename(r) in dv_victims]
+            return self._commit_files(
                 m,
                 base,
-                assemble_dv,
+                remove=full_rels,
+                dv=(dv_rel, named) if dv_rel is not None else None,
                 op={
                     "operation": "DELETE",
                     "mode": "dv",
@@ -5418,12 +5344,7 @@ class SnapshotTable:
                 .where(~F.coalesce(pred, F.lit(False)))
                 .withColumn("__bucket", self._bucket_expr(m))
             )
-            new_files, new_stats = self._write_bucket_files(
-                remaining,
-                self._bloom_cols_phys(m),
-                colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
-            )
+            new_files, new_stats = self._write_bucket_files(remaining, m)
         else:
             new_files, new_stats = {}, {}
         dropped = full_rels | set(straddle_rels)
@@ -5432,21 +5353,12 @@ class SnapshotTable:
             "files_rewritten": len(straddle_rels),
             "files_untouched": n_total - len(dropped),
         }
-
-        def assemble_cow(mb: dict) -> dict:
-            files = {}
-            for b, rels in mb["files"].items():
-                kept = [r for r in rels if r not in dropped]
-                if kept:
-                    files[b] = kept
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            return self._next_manifest(mb, files, new_stats)
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble_cow,
+            remove=dropped,
+            add=new_files,
+            stats=new_stats,
             op={
                 "operation": "DELETE",
                 "mode": "cow",
@@ -5571,12 +5483,7 @@ class SnapshotTable:
                 updated = post_image(pre).withColumn(
                     "__bucket", self._bucket_expr(m)
                 )
-                new_files, new_stats = self._write_bucket_files(
-                    updated,
-                    self._bloom_cols_phys(m),
-                    colmap=cmap,
-                    partition_by=self._pdir_field(m),
-                )
+                new_files, new_stats = self._write_bucket_files(updated, m)
                 if not new_files:
                     self.last_dml = {
                         "files_rewritten": 0,
@@ -5597,22 +5504,15 @@ class SnapshotTable:
                 "rows_updated": n_dead,
             }
 
-            def assemble_dv(mb: dict) -> dict:
-                files = dict(mb["files"])
-                for b, rels in new_files.items():
-                    files[b] = files.get(b, []) + rels
-                dvs_b = dict(mb.get("dvs", {}))
-                # only files the sidecar actually names (ADVICE r7):
-                # advisory-affected files with zero victims stay DV-free
-                for rel in affected_rels:
-                    if os.path.basename(rel) in dv_victims:
-                        dvs_b[rel] = dvs_b.get(rel, []) + [dv_rel]
-                return self._next_manifest(mb, files, new_stats, dvs=dvs_b)
-
-            return self._commit_rebased(
+            # only files the sidecar actually names (ADVICE r7):
+            # advisory-affected files with zero victims stay DV-free
+            named = [r for r in affected_rels if os.path.basename(r) in dv_victims]
+            return self._commit_files(
                 m,
                 base,
-                assemble_dv,
+                add=new_files,
+                stats=new_stats,
+                dv=(dv_rel, named),
                 op={
                     "operation": "UPDATE",
                     "mode": "dv",
@@ -5634,32 +5534,17 @@ class SnapshotTable:
             .unionByName(src.where(~pred))
             .withColumn("__bucket", self._bucket_expr(m))
         )
-        new_files, new_stats = self._write_bucket_files(
-            out,
-            self._bloom_cols_phys(m),
-            colmap=self._colmap(m),
-            partition_by=self._pdir_field(m),
-        )
-        dropped = builtins.set(affected_rels)
+        new_files, new_stats = self._write_bucket_files(out, m)
         self.last_dml = {
             "files_rewritten": len(affected_rels),
             "files_untouched": n_total - len(affected_rels),
         }
-
-        def assemble_cow(mb: dict) -> dict:
-            files = {}
-            for b, rels in mb["files"].items():
-                kept = [r for r in rels if r not in dropped]
-                if kept:
-                    files[b] = kept
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            return self._next_manifest(mb, files, new_stats)
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble_cow,
+            remove=affected_rels,
+            add=new_files,
+            stats=new_stats,
             op={
                 "operation": "UPDATE",
                 "mode": "cow",
@@ -5706,15 +5591,10 @@ class SnapshotTable:
         if all(m.get("stats", {}).get(r) == s for r, s in new_stats.items()):
             return base  # stats already current — no empty commit
 
-        def assemble(mb: dict) -> dict:
-            return self._next_manifest(
-                mb, {b: list(r) for b, r in mb["files"].items()}, new_stats
-            )
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            stats=new_stats,
             op={"operation": "ANALYZE", "files": len(rel_full)},
         )
 
@@ -5797,19 +5677,12 @@ class SnapshotTable:
             targets = sorted(pool)  # clustered rewrite touches all in scope
         if not targets:
             return base
-        old_files = [
-            os.path.join(self.path, rel)
-            for b in targets
-            for rel in m["files"][b]
-        ]
-        rows = self._read_files(old_files, m).withColumn(
-            "__bucket", self._bucket_expr(m)
-        )
+        old_rels = [rel for b in targets for rel in m["files"][b]]
+        rows = self._read_files(
+            [self._entry_full(r) for r in old_rels], m
+        ).withColumn("__bucket", self._bucket_expr(m))
         if zorder_by is None:
-            new_files, new_stats = self._write_bucket_files(
-                rows, self._bloom_cols_phys(m), colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
-            )
+            new_files, new_stats = self._write_bucket_files(rows, m)
         else:
             from .operators.layout import with_normalized_zorder_n
 
@@ -5821,29 +5694,14 @@ class SnapshotTable:
                 .drop("__zval")
             )
             new_files, new_stats = self._write_bucket_files(
-                arranged, self._bloom_cols_phys(m), arranged=True,
-                colmap=self._colmap(m),
-                partition_by=self._pdir_field(m),
+                arranged, m, arranged=True
             )
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels
-                for b, rels in mb["files"].items()
-                if b not in set(targets)
-            }
-            for b, rels in new_files.items():
-                # ADDITIVE outside the rewritten set: after a partition-
-                # spec evolution the rewrite MIGRATES rows to the current
-                # default spec, so rewritten rows can land in a live
-                # bucket that was NOT a compaction target — replacing its
-                # list would silently drop its existing files
-                files[b] = files.get(b, []) + rels
-            return self._next_manifest(mb, files, new_stats)
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=old_rels,
+            add=new_files,
+            stats=new_stats,
             op={
                 "operation": "OPTIMIZE",
                 "zorder": list(zorder_by) if zorder_by else [],
@@ -6077,7 +5935,6 @@ class SnapshotTable:
         self, feed, m, base, key, n_buckets, batch_id, app_id,
         merge_schema=False,
     ) -> int:
-        from pyspark.sql.types import StructType
         # cast-before-hash (the _align_source_types rule): the feed's
         # key drives the touched-bucket planning below, and a
         # narrow-typed key (int feed against a bigint table) would hash
@@ -6106,7 +5963,7 @@ class SnapshotTable:
         # value columns upcast too (lossless only) so post-widening
         # feeds keep replicating unchanged; `added` = columns an evolved
         # upstream grew that this replica doesn't have yet
-        post, table_schema, added = self._align_source_types(m, post)
+        post, _, added = self._align_source_types(m, post)
         if added and not merge_schema:
             raise ValueError(
                 f"apply_changes feed has columns not in the table schema: "
@@ -6114,15 +5971,7 @@ class SnapshotTable:
                 "(schema-evolving CDC apply) or evolve the target first"
             )
         post = self._fill_write_defaults(m, post)
-        # fresh physical slots for evolved names (append/merge's rule)
-        cmap = dict(self._colmap(m))
-        if added:
-            used_phys = {
-                cmap.get(f.name, f.name) for f in table_schema.fields
-            } | set(m.get("phys_tombstones", []))
-            for f in added:
-                if f.name in used_phys:
-                    cmap[f.name] = f"{f.name}_{uuid.uuid4().hex[:8]}"
+        evolved = self._evolved(m, added)
         # ONE job answers the duplicate-post-state certification AND
         # collects the touched hash buckets (guide §2 fewer actions —
         # these were two sequential jobs over the same cached feed, each
@@ -6183,16 +6032,12 @@ class SnapshotTable:
                 .collect()
             ]
         affected = self._affected_buckets(m, ids)
-        old_files = [
-            os.path.join(self.path, rel)
-            for b in affected
-            for rel in m["files"].get(b, [])
-        ]
+        old_rels = [rel for b in affected for rel in m["files"].get(b, [])]
         post_rows = post
         new_hw = None
         release = lambda: None  # noqa: E731
-        if old_files:
-            target = self._read_files(old_files, m)
+        if old_rels:
+            target = self._read_files([self._entry_full(r) for r in old_rels], m)
             keep = target.join(touched, key, "left_anti")
             if ident_col is not None:
                 # Delta's identity-under-MERGE rule, mirrored from
@@ -6238,37 +6083,17 @@ class SnapshotTable:
             )
         merged = self._recompute_generated(m, merged)
         try:
-            new_files, new_stats = self._write_bucket_files(
-                merged, self._bloom_cols_phys(m), colmap=cmap,
-                partition_by=self._pdir_field(m),
-            )
+            new_files, new_stats = self._write_bucket_files(merged, evolved)
         finally:
             release()
-        def assemble(mb: dict) -> dict:
-            files = {
-                b: rels
-                for b, rels in mb["files"].items()
-                if b not in set(affected)
-            }
-            files.update(new_files)
-            nxt = self._next_manifest(
-                mb,
-                files,
-                new_stats,
-                batch_id,
-                app_id,
-                identity={ident_col: new_hw} if new_hw is not None else None,
-            )
-            if added:
-                nxt["schema"] = StructType(table_schema.fields + added).json()
-                if cmap:
-                    nxt["colmap"] = cmap
-            return nxt
-
-        return self._commit_rebased(
+        return self._commit_files(
             m,
             base,
-            assemble,
+            remove=old_rels,
+            add=new_files,
+            stats=new_stats,
+            identity={ident_col: new_hw} if new_hw is not None else None,
+            evolved=evolved,
             op={"operation": "CDC APPLY", "schema_evolved": bool(added)},
             touched=affected,
             batch_id=batch_id,

@@ -54,13 +54,6 @@ def decode_image(payload: bytes) -> "object":
     raise NotImplementedError("image decode requires Pillow/opencv — not in this container")
 
 
-def resize_image(pixels: "object", width: int, height: int) -> "object":
-    """Resize decoded pixels. STUB (same reason as decode_image); in a real
-    pipeline this runs inside the same mapInPandas batch as the decode so
-    the raw pixels never cross a shuffle."""
-    raise NotImplementedError("image resize requires Pillow/opencv — not in this container")
-
-
 def resample_audio(payload: bytes, target_hz: int = 16_000) -> "object":
     """Decode + resample an audio payload. STUB: no soundfile/librosa in
     this container; the mapInPandas plumbing (batch shape, binary column,

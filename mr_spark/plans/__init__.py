@@ -15,14 +15,6 @@ def formatted(df: DataFrame) -> str:
     )
 
 
-def has_pushed_filters(df: DataFrame) -> bool:
-    """True if the parquet scan carries at least one pushed filter."""
-    plan = formatted(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan.split(
-        "PushedFilters: ["
-    )[0]
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     plan = formatted(df)
     out = []

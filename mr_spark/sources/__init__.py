@@ -46,16 +46,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register tables as temp views so queries can be written in SQL."""
-    for n in (names or TPCH_TABLES):
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_csv(spark: SparkSession, path: str, schema) -> DataFrame:
     """CSV source with an EXPLICIT schema — inferSchema is a full extra
     pass over the data (2× read at 100 TB); never in production paths."""

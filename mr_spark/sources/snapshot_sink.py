@@ -688,18 +688,13 @@ class SnapshotWriter(DataSourceArrowWriter):
         for d in staging_dirs:
             if d and os.path.isdir(d):
                 shutil.rmtree(d)
-        def assemble(mb: dict) -> dict:
-            files = {b: list(rels) for b, rels in mb["files"].items()}
-            for b, rels in new_files.items():
-                files[b] = files.get(b, []) + rels
-            return t._next_manifest(mb, files, new_stats, batch_id, app_id)
-
         # purely additive (touched=None): the sink append rebases across
         # any concurrent DATA commit; an identity change still aborts
-        t._commit_rebased(
+        t._commit_files(
             m,
             base,
-            assemble,
+            add=new_files,
+            stats=new_stats,
             op=(
                 {"operation": "STREAMING UPDATE", "epoch": batch_id}
                 if batch_id is not None

@@ -49,7 +49,8 @@ def test_crash_before_commit_is_invisible_and_vacuumable(spark, tmp_path):
     # simulate the dead writer: data files land, no manifest, no pointer
     orphan_df = spark.createDataFrame([(7, "GHOST")], "k bigint, v string")
     t._write_bucket_files(
-        orphan_df.withColumn("__bucket", F.pmod(F.hash(F.col("k")), F.lit(4)))
+        orphan_df.withColumn("__bucket", F.pmod(F.hash(F.col("k")), F.lit(4))),
+        t._manifest(1),
     )
     assert t.latest_version() == 1
     assert _rows(t.read()) == before  # orphan rows invisible
@@ -1744,6 +1745,125 @@ def test_delete_conflicts_with_concurrent_dv_on_read_bucket(spark, tmp_path):
     # the DV delete survived untouched
     assert k2 not in dict(_rows(t.read()))
     assert k1 in dict(_rows(t.read()))
+
+
+_RB_SCHEMA = "k bigint, p string, v string"
+
+
+def _rb_table(spark, path):
+    """Partitioned on p: 'a' holds keys 0..19 plus an appended second
+    file set (keys 100..139), so its buckets are multi-file compaction
+    targets; 'b' holds keys 20..39 in single-file buckets."""
+    rows = [(k, "a" if k < 20 else "b", f"v{k}") for k in range(40)]
+    t = SnapshotTable.create(
+        spark,
+        path,
+        spark.createDataFrame(rows, _RB_SCHEMA),
+        key="k",
+        n_buckets=4,
+        partition_by="p",
+    )
+    t.append(
+        spark.createDataFrame(
+            [(k, "a", f"v{k}") for k in range(100, 140)], _RB_SCHEMA
+        )
+    )
+    return t
+
+
+def _rb_rows(t):
+    return {r["k"]: (r["p"], r["v"]) for r in t.read().collect()}
+
+
+def _rb_copy_into(spark, t, tmp_path):
+    landing = str(tmp_path / "landing")
+    spark.createDataFrame([(300, "b", "landed")], _RB_SCHEMA).coalesce(
+        1
+    ).write.mode("overwrite").parquet(landing)
+    t.copy_into(
+        [
+            os.path.join(landing, f)
+            for f in os.listdir(landing)
+            if f.endswith(".parquet")
+        ]
+    )
+
+
+def _rb_analyze(spark, t, tmp_path):
+    t.add_bloom_index("v")  # live files lack blooms: analyze commits
+    t.analyze()
+
+
+# path -> (write, expected rows from the pre-write rows, reads buckets)
+_RB_WRITES = {
+    "update_cow": (
+        lambda spark, t, tmp: t.update({"v": "'upd'"}, where=("p", "a", "a")),
+        lambda r0: {
+            k: (p, "upd" if p == "a" else v) for k, (p, v) in r0.items()
+        },
+        True,
+    ),
+    "compact": (
+        lambda spark, t, tmp: t.compact(),
+        lambda r0: r0,
+        True,
+    ),
+    "replace_where": (
+        lambda spark, t, tmp: t.replace_where(
+            "a", spark.createDataFrame([(0, "a", "rw")], _RB_SCHEMA)
+        ),
+        lambda r0: {
+            0: ("a", "rw"),
+            **{k: pv for k, pv in r0.items() if pv[0] != "a"},
+        },
+        True,
+    ),
+    "apply_changes": (
+        lambda spark, t, tmp: t.apply_changes(
+            spark.createDataFrame(
+                [(0, "a", "cdc", "update_postimage")],
+                _RB_SCHEMA + ", _change_type string",
+            )
+        ),
+        lambda r0: {**r0, 0: ("a", "cdc")},
+        True,
+    ),
+    "copy_into": (_rb_copy_into, lambda r0: {**r0, 300: ("b", "landed")}, False),
+    "analyze": (_rb_analyze, lambda r0: r0, False),
+}
+
+
+@pytest.mark.parametrize("path", sorted(_RB_WRITES))
+def test_write_path_rebases_disjoint_and_conflicts_on_read_bucket(
+    spark, tmp_path, path
+):
+    """Every rebasing write path commutes with a concurrent append into
+    a bucket it never read (a brand-new partition): one rebase, both
+    writes' rows present. Paths that read buckets still refuse to
+    rebase over a concurrent rewrite of one of them (key 0's bucket in
+    partition 'a', which each of them reads)."""
+    write, expect, reads = _RB_WRITES[path]
+    t = _rb_table(spark, str(tmp_path / "rebase"))
+    rows0 = _rb_rows(t)
+    t2 = SnapshotTable(spark, t.path)
+    t._pre_commit_hook = lambda: t2.append(
+        spark.createDataFrame([(500, "c", "other")], _RB_SCHEMA)
+    )
+    write(spark, t, tmp_path)
+    assert t.last_commit_retries == 1
+    rows = _rb_rows(t)
+    assert rows.pop(500) == ("c", "other")
+    assert rows == expect(rows0)
+    if not reads:
+        return
+    t = _rb_table(spark, str(tmp_path / "conflict"))
+    t2 = SnapshotTable(spark, t.path)
+    t._pre_commit_hook = lambda: t2.merge_upsert(
+        spark.createDataFrame([(0, "a", "theirs")], _RB_SCHEMA)
+    )
+    with pytest.raises(ConflictError, match="rewrote bucket"):
+        write(spark, t, tmp_path)
+    assert _rb_rows(t)[0] == ("a", "theirs")
 
 
 # ---- generated columns (GENERATED ALWAYS AS) -----------------------------

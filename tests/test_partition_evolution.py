@@ -102,6 +102,34 @@ def test_cross_spec_merge_and_delete_find_old_spec_rows(spark, tmp_path):
     assert t.read().count() == len(rows) - 1
 
 
+def test_merge_rebase_keeps_concurrent_append_to_migrated_bucket(
+    spark, tmp_path
+):
+    # the merge rewrites k=0's old-spec bucket, migrating its p1 rows
+    # into "p1|s1.<h>" — a bucket that did not exist when the merge
+    # planned, so it is not in the conflict set; a concurrent append
+    # landing there must survive the rebase (new files are appended to
+    # a bucket, never replace it)
+    from pyspark.sql.types import LongType
+
+    from mr_spark.sources.snapshot_sink import bucket_of
+
+    t, rows = _mk(spark, tmp_path)
+    t.set_partition_spec("pr")
+    h = bucket_of(0, LongType(), 4)
+    assert any(
+        pr == "p1" and bucket_of(k, LongType(), 4) == h for k, pr, _ in rows
+    )
+    newk = next(k for k in range(1000, 2000) if bucket_of(k, LongType(), 4) == h)
+    t2 = SnapshotTable(spark, t.path)
+    t._pre_commit_hook = lambda: t2.append(_df(spark, [(newk, "p1", -1.0)]))
+    t.merge_upsert(_df(spark, [(0, "p0", 999.0)]))
+    assert t.last_commit_retries == 1
+    got = {r["k"]: r["x"] for r in t.read().collect()}
+    assert len(got) == len(rows) + 1
+    assert got[newk] == -1.0 and got[0] == 999.0
+
+
 def test_drop_partition_proof_or_refusal_across_specs(spark, tmp_path):
     t, _ = _mk(spark, tmp_path)  # old rows: pr in {p0, p1}
     t.set_partition_spec("pr")

@@ -1,7 +1,9 @@
-"""Dump .explain("formatted") for named queries to plans/r10/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to <out_dir>/<q>_<tag>.txt.
 
-Usage: python tools/r10_plandump.py <tag> <query> [query ...]
-Tag is "before" or "after" (the judge checks plan claims against these).
+Usage: python tools/plandump.py <out_dir> <tag> <query> [query ...]
+e.g.   python tools/plandump.py plans/r10 after dedup_spans
+Tag names the side of a change ("before" / "after"), so plan-shape
+claims can be checked against the two dumps.
 """
 
 from __future__ import annotations
@@ -16,12 +18,11 @@ from mr_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r10-plandump", extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark("plandump", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     qs = ops.queries()
     for name in names:
