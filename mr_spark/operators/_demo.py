@@ -19,8 +19,11 @@ volumes: local NVMe, never a throttled system disk); else the old
 from __future__ import annotations
 
 import atexit
+import logging
 import os
 import shutil
+
+_log = logging.getLogger(__name__)
 
 _WAREHOUSE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -89,14 +92,18 @@ _SWEPT = False
 
 
 _STALE_AGE_SECS = 24 * 3600
+# the prefix every mkdtemp_scratch caller gives its random-suffixed dirs
+_AGED_PREFIX = "mrspark_"
 
 
 def _sweep_stale(base: str) -> None:
     """tmpfs is RAM: a SIGKILLed process never runs its atexit cleanup, so
     reclaim ``*_<pid>`` entries whose pid is gone (once per process; live
-    processes' dirs are left alone). Entries whose suffix is not a pid
-    (legacy mkdtemp leftovers) fall back to an age sweep — anything older
-    than a day is no live session's scratch."""
+    processes' dirs are left alone). ``mrspark_*`` entries whose suffix is
+    not a pid (legacy mkdtemp leftovers) fall back to an age sweep —
+    anything older than a day is no live session's scratch. Any other
+    name is not ours to judge by age and is left alone. Each reclaimed
+    path is logged."""
     global _SWEPT
     if _SWEPT:
         return
@@ -111,10 +118,14 @@ def _sweep_stale(base: str) -> None:
             if int(pid_part) != os.getpid() and not os.path.exists(
                 f"/proc/{pid_part}"
             ):
+                _log.info("reclaiming scratch of dead pid %s: %s", pid_part, full)
                 shutil.rmtree(full, ignore_errors=True)
+            continue
+        if not entry.startswith(_AGED_PREFIX):
             continue
         try:
             if now - os.path.getmtime(full) > _STALE_AGE_SECS:
+                _log.info("reclaiming day-old scratch: %s", full)
                 shutil.rmtree(full, ignore_errors=True)
         except OSError:
             pass

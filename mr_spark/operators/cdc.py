@@ -9,6 +9,7 @@ container — emulated with anti-join + union + window, the classic recipe).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table
 from . import query
+from ._demo import demo_path
 
 
 @query(
@@ -81,24 +83,45 @@ def merge_upsert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
     return kept.unionByName(source)
 
 
-def _snapshot_demo_path(name: str) -> str:
-    """Per-process demo-table path under spark-warehouse (pid-suffixed so
-    concurrent sessions never rmtree each other's live table; registered
-    for exit-time cleanup — see operators/_demo.py)."""
-    from ._demo import demo_path
-
-    return demo_path(name)
-
-
 # Per-process fixture memo: commits are immutable, so the same versioned
 # history serves every invocation in a process — like a real warehouse,
 # the table is built once and queries certify their mechanisms (pruning
 # ladders, feed classification, replay no-ops) against the committed
 # versions on EVERY run; only the initial build exercises the write path
 # per process (the write path itself is owned by tests/test_acid*.py).
-# Keyed by (sf_dir, demo, depth) and validated against the expected
-# version count so a crashed partial build is rebuilt, not reused.
+# Keyed by (sf_dir, demo) — one handle per demo table path — and
+# validated against the expected version count so a crashed partial
+# build is rebuilt, not reused.
 _FIXTURES: dict = {}
+
+
+def _fixture(n_versions: int | None = None):
+    """Memoize a demo-table builder ``build(spark, sf_dir, demo, *depth)``
+    in _FIXTURES. A memo hit is reused only while EVERY SnapshotTable in
+    it (builders may return a tuple) passes _fixture_alive at the
+    expected version count: ``n_versions``, or — for a builder declared
+    ``@_fixture()`` — the depth its caller passes as the fourth
+    argument. A deeper build of a demo overwrites the shallower entry
+    (same path, same handle), so a later shallower caller rebuilds
+    instead of seeing a deeper history under "latest"."""
+
+    def wrap(build):
+        @functools.wraps(build)
+        def memo(spark: SparkSession, sf_dir: str, demo: str, *depth):
+            from ..acid import SnapshotTable
+
+            n = depth[0] if depth else n_versions
+            hit = _FIXTURES.get((sf_dir, demo))
+            parts = hit if isinstance(hit, tuple) else (hit,)
+            tables = [p for p in parts if isinstance(p, SnapshotTable)]
+            if tables and all(_fixture_alive(t, spark, n) for t in tables):
+                return hit
+            built = _FIXTURES[(sf_dir, demo)] = build(spark, sf_dir, demo, *depth)
+            return built
+
+        return memo
+
+    return wrap
 
 
 def _fixture_alive(cached, spark: SparkSession, n_versions) -> bool:
@@ -112,8 +135,6 @@ def _fixture_alive(cached, spark: SparkSession, n_versions) -> bool:
     cached reconstruction references still exists on disk (found as a
     latent bug in round 6: acid_merge_upsert → matview_incremental
     under tools/scale_probe.py crashed on exactly this)."""
-    import os
-
     if cached is None or cached.spark is not spark:
         return False
     try:
@@ -128,37 +149,61 @@ def _fixture_alive(cached, spark: SparkSession, n_versions) -> bool:
         return False  # table dir gone — rebuild
 
 
-def _orders_merge_fixture(spark: SparkSession, sf_dir: str, demo: str):
-    """Shared target/source/table for the snapshot-table demo queries:
-    target = the 80% of orders with o_orderkey % 10 < 8; source UPDATES
-    the overlapping 30% (% 10 in 5..7, price + 1000) and INSERTS a fresh
-    20% (% 10 in 8..9). Both queries' oracles encode exactly these
-    fractions — one constructor keeps them in lockstep. Returns the table
-    with v1 = target committed and v2 = MERGE(source) committed."""
-    from ..acid import SnapshotTable
-
-    key = (sf_dir, demo, 2)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 2):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
-    target = o.where(F.col("o_orderkey") % 10 < 8)
-    source = o.where(F.col("o_orderkey") % 10 >= 5).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 1000
-    )
-    t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), target, key="o_orderkey", n_buckets=8
-    )
-    t.merge_upsert(source)
-    _FIXTURES[key] = t
-    return t
+def _orders(spark: SparkSession, sf_dir: str, custkey: bool = True) -> DataFrame:
+    """The orders projection the snapshot fixtures are built from:
+    (o_orderkey, o_custkey, o_totalprice, o_orderpriority), or the same
+    without o_custkey."""
+    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
+    if not custkey:
+        cols.remove("o_custkey")
+    return load_table(spark, sf_dir, "orders").select(*cols)
 
 
-@query(
-    "acid_merge_upsert",
-    oracle="""
+def _revenue(price: str = "o_totalprice", name: str = "revenue"):
+    """CAST(ROUND(SUM(CAST(price AS DECIMAL(18,2))), 2) AS DOUBLE) — the
+    exact revenue the snapshot oracles recompute (a decimal sum does not
+    depend on summation order, so both engines agree to the cent)."""
+    return (
+        F.round(F.sum(F.col(price).cast("decimal(18,2)")), 2)
+        .cast("double")
+        .alias(name)
+    )
+
+
+def _cents(col: str, name: str):
+    """SUM(CAST(ROUND(col * 100, 0) AS BIGINT)) — integer cents, for the
+    oracles that quantize float values before summing."""
+    return (
+        F.sum(F.round(F.col(col) * 100, 0).cast("bigint")).cast("bigint").alias(name)
+    )
+
+
+def _priority_revenue(df: DataFrame, by=None, aggs=None) -> DataFrame:
+    """The aggregate the snapshot/CDC queries end in: per ``by`` group
+    (default o_orderpriority AS priority), the BIGINT ``n_orders`` count,
+    then ``aggs`` (default: the exact revenue)."""
+    if by is None:
+        by = F.col("o_orderpriority").alias("priority")
+    return df.groupBy(by).agg(
+        F.count("*").cast("bigint").alias("n_orders"),
+        *([_revenue()] if aggs is None else aggs),
+    )
+
+
+# oracles shared verbatim by several queries (cf. _RECOMPUTE_V3 below):
+# the per-priority aggregate over ALL of orders — what every fixture whose
+# commits reassemble the source must equal
+_ORDERS_BY_PRIORITY = """
+    SELECT o_orderpriority AS priority,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
+             AS revenue
+    FROM orders GROUP BY 1
+"""
+
+# full recompute of the merge fixture's state at v2 (the relational MERGE
+# replay: anti-join + union)
+_RECOMPUTE_V2 = """
     WITH target AS (
       SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
       FROM orders WHERE o_orderkey % 10 < 8
@@ -178,8 +223,32 @@ def _orders_merge_fixture(spark: SparkSession, sf_dir: str, demo: str):
            CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
              AS revenue
     FROM merged GROUP BY 1
-    """,
-)
+"""
+
+
+@_fixture(2)
+def _orders_merge_fixture(spark: SparkSession, sf_dir: str, demo: str):
+    """Shared target/source/table for the snapshot-table demo queries:
+    target = the 80% of orders with o_orderkey % 10 < 8; source UPDATES
+    the overlapping 30% (% 10 in 5..7, price + 1000) and INSERTS a fresh
+    20% (% 10 in 8..9). Both queries' oracles encode exactly these
+    fractions — one constructor keeps them in lockstep. Returns the table
+    with v1 = target committed and v2 = MERGE(source) committed."""
+    from ..acid import SnapshotTable
+
+    o = _orders(spark, sf_dir)
+    target = o.where(F.col("o_orderkey") % 10 < 8)
+    source = o.where(F.col("o_orderkey") % 10 >= 5).withColumn(
+        "o_totalprice", F.col("o_totalprice") + 1000
+    )
+    t = SnapshotTable.create(
+        spark, demo_path(demo), target, key="o_orderkey", n_buckets=8
+    )
+    t.merge_upsert(source)
+    return t
+
+
+@query("acid_merge_upsert", oracle=_RECOMPUTE_V2)
 def acid_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL MERGE INTO on mr_spark's own multi-version snapshot table
     (mr_spark/acid.py — the Delta/Iceberg commit protocol on plain
@@ -195,46 +264,31 @@ def acid_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (manifest pruning); untouched buckets carry by reference — at 100 TB
     a narrow MERGE moves only its own slice."""
     t = _orders_merge_fixture(spark, sf_dir, "acid_cdc_base")
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(3)
 def _stream_sink_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """v1 = 30% of orders; a 2-file parquet landing zone holds the other
     70%, streamed in through ``writeStream.format("snapshot")`` with
     maxFilesPerTrigger=1 + availableNow — TWO micro-batch commits (v2,
     v3), each recording {app_id: epoch} in the txn map. Final state =
     ALL orders, which is exactly what the oracle recomputes. Memoized
-    per process (see _FIXTURES); a rebuild clears the landing zone and
+    per process (see _fixture); a rebuild clears the landing zone and
     the stream checkpoint so offsets can never go stale against a fresh
     table."""
     import shutil
 
     from ..acid import SnapshotTable
-
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
     from ..sources.snapshot_source import register
 
     register(spark)
-    tbl_path = _snapshot_demo_path(demo)
-    land = _snapshot_demo_path(demo + "_land")
-    cp = _snapshot_demo_path(demo + "_cp")
+    tbl_path = demo_path(demo)
+    land = demo_path(demo + "_land")
+    cp = demo_path(demo + "_cp")
     for p in (tbl_path, land, cp):
         shutil.rmtree(p, ignore_errors=True)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     t = SnapshotTable.create(
         spark,
         tbl_path,
@@ -258,20 +312,10 @@ def _stream_sink_fixture(spark: SparkSession, sf_dir: str, demo: str):
         .start()
     )
     q.awaitTermination(300)
-    _FIXTURES[key] = t
     return t
 
 
-@query(
-    "snapshot_stream_sink",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("snapshot_stream_sink", oracle=_ORDERS_BY_PRIORITY)
 def snapshot_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING write path for the snapshot table —
     ``df.writeStream.format("snapshot")`` (Spark 4 Python
@@ -334,40 +378,26 @@ def snapshot_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "replayed epoch 1 must not commit — the txn map should have "
             "skipped it"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(2)
 def _orders_clauses_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Target = 80% of orders; v2 = ONE atomic multi-clause MERGE:
     non-urgent matched rows UPDATE to the source price, urgent matched
     rows with o_custkey % 3 = 0 DELETE, unmatched source rows INSERT only
     when o_orderkey % 10 = 8, and target-only rows with o_custkey % 10 = 0
     are swept by WHEN NOT MATCHED BY SOURCE DELETE. The oracle replays
-    exactly these fractions. Memoized per process (see _FIXTURES)."""
+    exactly these fractions. Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 2)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 2):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     target = o.where(F.col("o_orderkey") % 10 < 8)
     source = o.where(F.col("o_orderkey") % 10 >= 5).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000
     )
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), target, key="o_orderkey", n_buckets=8
+        spark, demo_path(demo), target, key="o_orderkey", n_buckets=8
     )
     t.merge(
         source,
@@ -382,7 +412,6 @@ def _orders_clauses_fixture(spark: SparkSession, sf_dir: str, demo: str):
         batch_id=1,
         app_id="clauses_demo",
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -447,9 +476,7 @@ def acid_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
             "multi-clause merge must land as ONE atomic commit (v2), got "
             f"v{t.latest_version()}"
         )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     source = o.where(F.col("o_orderkey") % 10 >= 5).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000
     )
@@ -471,16 +498,7 @@ def acid_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
             "replayed multi-clause merge with the same (app_id, batch_id) "
             f"tag must be a no-op at v2, got v{v_replay}"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
 @query(
@@ -535,12 +553,7 @@ def snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t.changes(1, 2)
         .groupBy(F.col("_change_type").alias("change_type"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total"),
-        )
+        .agg(F.count("*").cast("bigint").alias("n_rows"), _revenue(name="total"))
     )
 
 
@@ -578,7 +591,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path("acid_evolve_demo"),
+        demo_path("acid_evolve_demo"),
         o.where(k % 2 == 0),
         key="o_orderkey",
         n_buckets=4,
@@ -589,16 +602,7 @@ def snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         merge_schema=True,
     )
-    return (
-        t.read()
-        .groupBy("priority_flag")
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read(), by="priority_flag")
 
 
 def maintain_agg_view(mv: DataFrame, feed: DataFrame, group: str) -> DataFrame:
@@ -635,27 +639,7 @@ def maintain_agg_view(mv: DataFrame, feed: DataFrame, group: str) -> DataFrame:
     # the maintained view must equal a FULL RECOMPUTE over the merged
     # state — the oracle is that recompute (same merge replay as
     # acid_merge_upsert), so a green row certifies the delta algebra
-    oracle="""
-    WITH target AS (
-      SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-      FROM orders WHERE o_orderkey % 10 < 8
-    ),
-    source AS (
-      SELECT o_orderkey, o_custkey, o_totalprice + 1000 AS o_totalprice,
-             o_orderpriority
-      FROM orders WHERE o_orderkey % 10 >= 5
-    ),
-    merged AS (
-      SELECT * FROM target
-      WHERE o_orderkey NOT IN (SELECT o_orderkey FROM source)
-      UNION ALL SELECT * FROM source
-    )
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM merged GROUP BY 1
-    """,
+    oracle=_RECOMPUTE_V2,
 )
 def matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL MATERIALIZED-VIEW MAINTENANCE from the snapshot
@@ -690,25 +674,17 @@ def matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orders_cdc_fixture(spark: SparkSession, sf_dir: str, demo: str, n_commits: int = 4):
+@_fixture()
+def _orders_cdc_fixture(spark: SparkSession, sf_dir: str, demo: str, n_commits: int):
     """The merge fixture extended with two more commits so replay-style
     consumers have a real multi-commit history: v3 = keyed DELETE of
     o_orderkey % 10 ∈ {0, 1}; v4 = blind APPEND re-inserting the % 10 = 0
     keys at price + 5000 (fresh unique keys — they were just deleted).
     Oracles replay exactly these fractions. Memoized per process like the
-    base fixture (see _FIXTURES)."""
-    key = (sf_dir, demo, n_commits)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, n_commits):
-        return cached
+    base fixture at depth ``n_commits`` (see _fixture): the deeper history
+    replaces the depth-2 memo entry of the same demo table."""
     t = _orders_merge_fixture(spark, sf_dir, demo)
-    # this demo's table is about to grow past v2 — drop the depth-2 memo
-    # entry (same object, same path) so a later depth-2 caller rebuilds
-    # instead of seeing a deeper history under "latest"
-    _FIXTURES.pop((sf_dir, demo, 2), None)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
     if n_commits >= 3:
         t.delete_keys(o.where((k % 10).isin(0, 1)).select("o_orderkey"))
@@ -718,48 +694,32 @@ def _orders_cdc_fixture(spark: SparkSession, sf_dir: str, demo: str, n_commits: 
                 "o_totalprice", F.col("o_totalprice") + 5000
             )
         )
-    _FIXTURES[key] = t
     return t
 
 
+@_fixture(3)
 def _append_only_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Append-only 3-version orders table (40% ⊕ 30% ⊕ 30%) for the
     table-as-stream read — every commit is insert-only, so the plain
     streaming source can represent the whole history. Memoized per
-    process (see _FIXTURES)."""
+    process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 10 < 4),
         key="o_orderkey",
         n_buckets=8,
     )
     t.append(o.where((k % 10 >= 4) & (k % 10 < 7)))
     t.append(o.where(k % 10 >= 7))
-    _FIXTURES[key] = t
     return t
 
 
-@query(
-    "snapshot_stream_source",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("snapshot_stream_source", oracle=_ORDERS_BY_PRIORITY)
 def snapshot_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLE-AS-STREAM read — ``spark.readStream.format("snapshot")``
     (sources/snapshot_source.py SnapshotStreamReader), Delta's standard
@@ -793,28 +753,14 @@ def snapshot_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     return run_to_completion(
-        feed.groupBy(F.col("o_orderpriority").alias("priority")).agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        ),
+        _priority_revenue(feed),
         name="mrspark_snapshot_stream_source",
         output_mode="complete",
         state_partitions=8,
     )
 
 
-@query(
-    "snapshot_generate_manifest",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("snapshot_generate_manifest", oracle=_ORDERS_BY_PRIORITY)
 def snapshot_generate_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GENERATE symlink_format_manifest (Delta's external-engine interop
     surface — SnapshotTable.generate): export the current version's file
@@ -847,43 +793,28 @@ def snapshot_generate_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"symlink manifest disagrees with the live manifest: "
             f"{len(listed)} listed vs {len(expected)} live files"
         )
-    return (
-        spark.read.parquet(*listed)
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(spark.read.parquet(*listed))
 
 
+@_fixture(2)
 def _identity_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Identity-column demo table: v1 = CREATE with identity="row_id"
     from the 60% of orders with o_orderkey % 10 < 6 (ids 1..n1 in
     o_orderkey order — allocation is deterministic), v2 = APPEND of the
     remaining 40% (ids n1+1.. continuing in key order). Memoized per
-    process (see _FIXTURES)."""
+    process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 2)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 2):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(F.col("o_orderkey") % 10 < 6),
         key="o_orderkey",
         n_buckets=8,
         identity="row_id",
     )
     t.append(o.where(F.col("o_orderkey") % 10 >= 6))
-    _FIXTURES[key] = t
     return t
 
 
@@ -964,31 +895,24 @@ def acid_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_rows"),
         F.min("row_id").cast("bigint").alias("min_id"),
         F.max("row_id").cast("bigint").alias("max_id"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-        .cast("double")
-        .alias("revenue"),
+        _revenue(),
     )
 
 
+@_fixture(2)
 def _generated_cols_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Orders table with a GENERATED column (o_cents = the price in
     integer cents): v1 = create from 70% of orders with the column
     OMITTED (computed at write); v2 = append the other 30% PROVIDING the
     column correctly (validated, not recomputed). Memoized per process
-    (see _FIXTURES)."""
+    (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 2)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 2):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 10 < 7),  # omits o_cents — computed at create
         key="o_orderkey",
         n_buckets=8,
@@ -1000,7 +924,6 @@ def _generated_cols_fixture(spark: SparkSession, sf_dir: str, demo: str):
             F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)"),
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -1043,9 +966,7 @@ def acid_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             "generated column must be materialized into the table schema"
         )
     base = t.latest_version()
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     bad = (
         o.where(F.col("o_orderkey") % 97 == 3)
         .limit(5)
@@ -1062,16 +983,12 @@ def acid_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "rejected generated-column write must commit NOTHING"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.sum("o_cents").cast("bigint").alias("total_cents"),
-        )
+    return _priority_revenue(
+        t.read(), aggs=[F.sum("o_cents").cast("bigint").alias("total_cents")]
     )
 
 
+@_fixture(3)
 def _concurrent_writers_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """TWO writers racing one table: writer A creates v1 (50% of orders)
     and starts an append of the last 30%; writer B's append of the
@@ -1080,20 +997,14 @@ def _concurrent_writers_fixture(spark: SparkSession, sf_dir: str, demo: str):
     loses the version race and rebases). Final state must be ALL orders;
     the rebase evidence (1 retry, A landing at v3 after basing on v1)
     is stored on the fixture for the query's certification. Memoized per
-    process (see _FIXTURES)."""
+    process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 10 < 5),
         key="o_orderkey",
         n_buckets=8,
@@ -1102,20 +1013,10 @@ def _concurrent_writers_fixture(spark: SparkSession, sf_dir: str, demo: str):
     t._pre_commit_hook = lambda: t2.append(o.where((k % 10).isin(5, 6)))
     t.append(o.where(k % 10 >= 7))
     t._demo_rebase = (t.last_commit_retries, t.latest_version())
-    _FIXTURES[key] = t
     return t
 
 
-@query(
-    "acid_concurrent_writers",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("acid_concurrent_writers", oracle=_ORDERS_BY_PRIORITY)
 def acid_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMISTIC CONCURRENCY with AUTOMATIC REBASE — Delta's logical
     conflict detection (acid.py _commit_rebased): two writers race one
@@ -1150,16 +1051,7 @@ def acid_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"history must show CREATE then both racing appends, got {ops!r}"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
 @query(
@@ -1339,7 +1231,7 @@ def cdf_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _orders_cdc_fixture(spark, sf_dir, "acid_cdfsrc_demo", 3)
     dst = SnapshotTable.create(
         spark,
-        _snapshot_demo_path("acid_cdfdst_demo"),
+        demo_path("acid_cdfdst_demo"),
         src.read(1),
         key="o_orderkey",
         n_buckets=8,
@@ -1353,16 +1245,7 @@ def cdf_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
             "replayed micro-batch was applied twice — txn-tag replay "
             "protection failed; the replica would double-apply on restart"
         )
-    return (
-        dst.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(dst.read())
 
 
 def scd2_from_feed(feed: DataFrame, key: str) -> DataFrame:
@@ -1469,12 +1352,7 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scd.groupBy(
         F.col("__start_at").alias("start_at"),
         F.coalesce(F.col("__end_at"), F.lit(-1)).cast("bigint").alias("end_at"),
-    ).agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-        .cast("double")
-        .alias("revenue"),
-    )
+    ).agg(F.count("*").cast("bigint").alias("n_rows"), _revenue())
 
 
 @query(
@@ -1535,7 +1413,7 @@ def acid_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_cents", F.round(F.col("o_totalprice") * 100).cast("bigint")
         )
     )
-    path = _snapshot_demo_path("acid_skip_demo")
+    path = demo_path("acid_skip_demo")
     # grid bounds from the data (1-row agg collect — bounded at any SF);
     # same integer arithmetic as the oracle's // splits
     b = o.agg(
@@ -1572,42 +1450,30 @@ def acid_data_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{n_key} (key) -> {n_both} (key AND cents) — some column's "
             "manifest stats pruned nothing"
         )
-    return (
-        t.read(where=[key_pred, cents_pred])
-        .groupBy((k % 7).cast("bigint").alias("key_mod"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+    return _priority_revenue(
+        t.read(where=[key_pred, cents_pred]),
+        by=(k % 7).cast("bigint").alias("key_mod"),
     )
 
 
+@_fixture(10)
 def _orders_log_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """A 10-commit history for the log-checkpoint query: v1 = the
     o_orderkey % 10 == 0 slice of orders, v2..v10 = blind appends of the
     other nine slices — so the final state is EXACTLY orders, and the
     default checkpoint_interval of 8 rolls a parquet checkpoint at v9
     (delta-chain length 8 from the full v1 base). Memoized per process
-    like the other fixtures (see _FIXTURES)."""
+    like the other fixtures (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 10)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 10):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), o.where(k % 10 == 0),
+        spark, demo_path(demo), o.where(k % 10 == 0),
         key="o_orderkey", n_buckets=4,
     )
     for i in range(1, 10):
         t.append(o.where(k % 10 == i))
-    _FIXTURES[key] = t
     return t
 
 
@@ -1615,13 +1481,7 @@ def _orders_log_fixture(spark: SparkSession, sf_dir: str, demo: str):
     "snapshot_log_checkpoint",
     # the 10 commits partition orders by o_orderkey % 10, so the final
     # version IS orders — the oracle aggregates the source directly
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
+    oracle=_ORDERS_BY_PRIORITY,
 )
 def snapshot_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELTA-MANIFEST LOG + PARQUET CHECKPOINT end to end (VERDICT r4 #3,
@@ -1662,18 +1522,10 @@ def snapshot_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "base with a sub-interval delta fold; the log-checkpoint read "
             "path is broken"
         )
-    return (
-        fresh.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(fresh.read())
 
 
+@_fixture(8)
 def _orders_bloom_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """An 8-commit history for the bloom-index query: orders gain a
     synthetic high-cardinality ``tag`` column ('t' || o_orderkey % 97)
@@ -1681,16 +1533,11 @@ def _orders_bloom_fixture(spark: SparkSession, sf_dir: str, demo: str):
     file holds ~12 tag values SCATTERED across the tag alphabet: every
     file's [min, max] tag range spans nearly everything (range stats
     can't prune a tag point lookup) while its bloom holds only its own
-    slice. bloom_cols=["tag"]. Memoized per process (see _FIXTURES)."""
+    slice. bloom_cols=["tag"]. Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 8)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 8):
-        return cached
     o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        _orders(spark, sf_dir, custkey=False)
         .withColumn(
             "tag",
             F.concat(F.lit("t"), (F.col("o_orderkey") % 97).cast("string")),
@@ -1699,7 +1546,7 @@ def _orders_bloom_fixture(spark: SparkSession, sf_dir: str, demo: str):
     res = F.col("o_orderkey") % 97
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(res % 8 == 0),
         key="o_orderkey",
         n_buckets=2,
@@ -1707,7 +1554,6 @@ def _orders_bloom_fixture(spark: SparkSession, sf_dir: str, demo: str):
     )
     for i in range(1, 8):
         t.append(o.where(res % 8 == i))
-    _FIXTURES[key] = t
     return t
 
 
@@ -1759,16 +1605,7 @@ def acid_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stats alone, {n_bloom} with blooms — the point-lookup index "
             "is not contributing"
         )
-    return (
-        t.read(where=pred)
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read(where=pred))
 
 
 # every slice of the 4-commit fixture, classified and aggregated — the
@@ -1851,32 +1688,25 @@ def stream_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     agg = feed.groupBy(F.col("_change_type").alias("change_type")).agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-        .cast("double")
-        .alias("total"),
+        F.count("*").cast("bigint").alias("n_rows"), _revenue(name="total")
     )
     return run_to_completion(
         agg, name="mrspark_cdf_stream", output_mode="complete", state_partitions=8
     )
 
 
+@_fixture(5)
 def _orders_zorder_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """5-version history for the OPTIMIZE ZORDER query: four appends
     sliced by o_orderkey % 4 — a slice scatters BOTH o_orderkey and the
     derived price-cents across their full domains, so every pre-optimize
     file spans everything and range stats prune nothing — then
     compact(zorder_by=(o_orderkey, o_cents)) as v5. Memoized per process
-    (see _FIXTURES)."""
+    (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 5)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 5):
-        return cached
     o = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        _orders(spark, sf_dir, custkey=False)
         .withColumn(
             "o_cents", F.round(F.col("o_totalprice") * 100).cast("bigint")
         )
@@ -1884,7 +1714,7 @@ def _orders_zorder_fixture(spark: SparkSession, sf_dir: str, demo: str):
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 4 == 0),
         key="o_orderkey",
         n_buckets=2,
@@ -1892,7 +1722,6 @@ def _orders_zorder_fixture(spark: SparkSession, sf_dir: str, demo: str):
     for i in (1, 2, 3):
         t.append(o.where(k % 4 == i))
     t.compact(zorder_by=("o_orderkey", "o_cents"), files_per_bucket=4)
-    _FIXTURES[key] = t
     return t
 
 
@@ -1968,41 +1797,29 @@ def acid_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{n_post_all} files kept for the quadrant read — clustering "
             "is broken"
         )
-    return (
-        t.read(where=pred)
-        .groupBy((F.col("o_orderkey") % 5).cast("bigint").alias("key_mod"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+    return _priority_revenue(
+        t.read(where=pred),
+        by=(F.col("o_orderkey") % 5).cast("bigint").alias("key_mod"),
     )
 
 
 
 
+@_fixture(2)
 def _orders_dv_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """2-version history for the deletion-vector query: v1 = all of
     orders, v2 = merge-on-read DELETE of o_orderkey % 10 in (2, 6) —
-    a DV-sidecar-only commit. Memoized per process (see _FIXTURES)."""
+    a DV-sidecar-only commit. Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 2)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 2):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), o, key="o_orderkey", n_buckets=8
+        spark, demo_path(demo), o, key="o_orderkey", n_buckets=8
     )
     t.delete_keys(
         o.where((F.col("o_orderkey") % 10).isin(2, 6)).select("o_orderkey"),
         mode="dv",
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -2045,55 +1862,31 @@ def acid_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if not m2.get("dvs"):
         raise RuntimeError("DV delete recorded no deletion vectors")
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(3)
 def _orders_constraint_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the constraints query: v1 = even-key half of
     orders, v2 = ADD CONSTRAINT (metadata-only), v3 = valid append of the
-    odd-key half. Memoized per process (see _FIXTURES)."""
+    odd-key half. Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 2 == 0),
         key="o_orderkey",
         n_buckets=4,
     )
     t.add_constraint("price_positive", "o_totalprice > 0")
     t.append(o.where(k % 2 == 1))
-    _FIXTURES[key] = t
     return t
 
 
-@query(
-    "acid_constraints",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("acid_constraints", oracle=_ORDERS_BY_PRIORITY)
 def acid_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHECK CONSTRAINTS (Delta's ALTER TABLE ADD CONSTRAINT,
     SnapshotTable.add_constraint — mr_spark/acid.py): a METADATA-ONLY
@@ -2116,8 +1909,7 @@ def acid_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _orders_constraint_fixture(spark, sf_dir, "acid_constraint_demo")
     v_now = t.latest_version()
     bad = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        _orders(spark, sf_dir, custkey=False)
         .withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
         .withColumn("o_totalprice", -F.col("o_totalprice"))
         .limit(5)
@@ -2133,31 +1925,17 @@ def acid_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             "accepted (or committed a version) — the data-quality gate "
             "is broken"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(4)
 def _orders_restore_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history for the RESTORE query: v1 create (80% of
     orders), v2 MERGE (update 30% / insert 20%), v3 keyed DELETE of
     o_orderkey % 10 in (0, 1), v4 = restore(2) — the rollback that undoes
-    the delete. Memoized per process (see _FIXTURES)."""
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
+    the delete. Memoized per process (see _fixture)."""
     t = _orders_cdc_fixture(spark, sf_dir, demo, 3)
-    _FIXTURES.pop((sf_dir, demo, 3), None)
     t.restore(2)
-    _FIXTURES[key] = t
     return t
 
 
@@ -2166,27 +1944,7 @@ def _orders_restore_fixture(spark: SparkSession, sf_dir: str, demo: str):
     # v4 == v2 == the plain merge result, so the oracle is the same
     # relational MERGE replay acid_merge_upsert uses — restoring must make
     # the delete invisible again
-    oracle="""
-    WITH target AS (
-      SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
-      FROM orders WHERE o_orderkey % 10 < 8
-    ),
-    source AS (
-      SELECT o_orderkey, o_custkey, o_totalprice + 1000 AS o_totalprice,
-             o_orderpriority
-      FROM orders WHERE o_orderkey % 10 >= 5
-    ),
-    merged AS (
-      SELECT * FROM target
-      WHERE o_orderkey NOT IN (SELECT o_orderkey FROM source)
-      UNION ALL SELECT * FROM source
-    )
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM merged GROUP BY 1
-    """,
+    oracle=_RECOMPUTE_V2,
 )
 def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESTORE — version rollback as a commit (Delta's ``RESTORE TABLE
@@ -2224,40 +1982,23 @@ def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rolled-back version 3 no longer readable — restore must "
             "preserve history for time travel, not erase it"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(2)
 def _orders_clone_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Shallow clone of the shared v2 merge fixture plus ONE divergent
     commit: a single-row MERGE updating the minimum o_orderkey (price
     +777) — narrow on purpose, so only that key's bucket localizes and
     the other buckets keep their absolute references to the source.
-    Returns (clone, source). Memoized per process (see _FIXTURES)."""
-    key = (sf_dir, demo, 2)
-    cached = _FIXTURES.get(key)
-    if cached is not None and cached[0].spark is spark:
-        try:
-            if cached[0].latest_version() == 2 and cached[1].latest_version() == 2:
-                return cached
-        except Exception:
-            pass  # table dir gone — rebuild
+    Returns (clone, source). Memoized per process (see _fixture)."""
     src = _orders_merge_fixture(spark, sf_dir, "acid_cdc_base")
-    c = src.clone(_snapshot_demo_path(demo))
+    c = src.clone(demo_path(demo))
     kmin = src.read().agg(F.min("o_orderkey")).collect()[0][0]
     one = src.read().where(F.col("o_orderkey") == kmin).withColumn(
         "o_totalprice", F.col("o_totalprice") + 777
     )
     c.merge_upsert(one)
-    _FIXTURES[key] = (c, src)
     return c, src
 
 
@@ -2333,18 +2074,10 @@ def snapshot_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if src.latest_version() != 2:
         raise RuntimeError("clone write advanced the SOURCE table's version")
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(4)
 def _row_tracking_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history for the row-tracking query: v1 = the %3==0
     orders slice created with row_tracking=True (hidden ``_row_id`` ids
@@ -2356,17 +2089,13 @@ def _row_tracking_fixture(spark: SparkSession, sf_dir: str, demo: str):
     count — proof deletes never free ids). Memoized per process."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
     r = F.col("o_orderkey") % 3
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(r == 0),
         key="o_orderkey",
         n_buckets=4,
@@ -2382,7 +2111,6 @@ def _row_tracking_fixture(spark: SparkSession, sf_dir: str, demo: str):
         ).withColumn("o_totalprice", F.col("o_totalprice") * 2)
     )
     t.append(o.where(r == 1))
-    _FIXTURES[key] = t
     return t
 
 
@@ -2459,20 +2187,17 @@ def acid_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a surviving row's id changed across the merge — row "
             "identity is not stable"
         )
-    return (
-        t.read(with_row_ids=True)
-        .groupBy((F.col("_row_id") % 7).cast("bigint").alias("id_band"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.min("_row_id").cast("bigint").alias("min_id"),
-            F.max("_row_id").cast("bigint").alias("max_id"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+    return t.read(with_row_ids=True).groupBy(
+        (F.col("_row_id") % 7).cast("bigint").alias("id_band")
+    ).agg(
+        F.count("*").cast("bigint").alias("n_rows"),
+        F.min("_row_id").cast("bigint").alias("min_id"),
+        F.max("_row_id").cast("bigint").alias("max_id"),
+        _revenue(),
     )
 
 
+@_fixture(4)
 def _defaults_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history for the column-defaults query: v1 = the %3==0
     orders slice (no ``channel`` column anywhere); v2 = add_column
@@ -2481,20 +2206,14 @@ def _defaults_fixture(spark: SparkSession, sf_dir: str, demo: str):
     (write default materializes); v4 = append of the %3==2 slice with
     an EXPLICIT channel ('store' for even keys, NULL for odd — the
     explicit NULL must survive, distinguishable from omission).
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     r = F.col("o_orderkey") % 3
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(r == 0),
         key="o_orderkey",
         n_buckets=4,
@@ -2510,7 +2229,6 @@ def _defaults_fixture(spark: SparkSession, sf_dir: str, demo: str):
             F.when(F.col("o_orderkey") % 2 == 0, F.lit("store")),
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -2558,18 +2276,10 @@ def acid_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if "channel" in t.read(version=1).columns:
         raise RuntimeError("time travel below the alter grew the column")
-    return (
-        t.read()
-        .groupBy("channel")
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read(), by="channel")
 
 
+@_fixture(1)
 def _deep_clone_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Fixture for the deep-clone query: a TEMPORARY source table
     (orders keyed by o_orderkey, with a merge-on-read predicate DELETE
@@ -2577,30 +2287,23 @@ def _deep_clone_fixture(spark: SparkSession, sf_dir: str, demo: str):
     commit — after which the SOURCE DIRECTORY IS DELETED OUTRIGHT.
     Every read of the fixture therefore proves self-containment: a
     single surviving external reference would fail the scan. Memoized
-    per process (see _FIXTURES)."""
+    per process (see _fixture)."""
     import shutil as sh
 
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 1)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 1):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     src = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo + "_src"),
+        demo_path(demo + "_src"),
         o,
         key="o_orderkey",
         n_buckets=4,
     )
     k_hi = int(o.agg(F.expr("max(o_orderkey) div 10")).first()[0])
     src.delete(where=("o_orderkey", 1, k_hi), mode="dv")
-    t = src.clone(_snapshot_demo_path(demo), deep=True)
+    t = src.clone(demo_path(demo), deep=True)
     sh.rmtree(src.path)  # the strongest self-containment proof
-    _FIXTURES[key] = t
     return t
 
 
@@ -2663,40 +2366,22 @@ def snapshot_clone_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "CLONE op metrics missing or inconsistent with the manifest"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(3)
 def _orders_copy_into_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Landing-zone fixture for COPY INTO: orders written once as parquet
     files in four slices (o_orderkey % 4), then ingested through two
     overlapping copy_into runs — run 1 loads slices 0-1, run 2 re-lists
     everything and loads only slices 2-3. Returns (table, all_files).
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if cached is not None and cached[0].spark is spark:
-        try:
-            if cached[0].latest_version() == 3:
-                return cached
-        except Exception:
-            pass  # table dir gone — rebuild
     import os as _os
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    land = _snapshot_demo_path(demo + "_landing")
+    o = _orders(spark, sf_dir, custkey=False)
+    land = demo_path(demo + "_landing")
     k = F.col("o_orderkey")
     batches = []
     for i in range(4):
@@ -2710,7 +2395,7 @@ def _orders_copy_into_fixture(spark: SparkSession, sf_dir: str, demo: str):
             )
         )
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), o.limit(0), key="o_orderkey",
+        spark, demo_path(demo), o.limit(0), key="o_orderkey",
         n_buckets=4,
     )
     first = batches[0] + batches[1]
@@ -2725,22 +2410,14 @@ def _orders_copy_into_fixture(spark: SparkSession, sf_dir: str, demo: str):
             f"copy_into file accounting wrong: run1 ({loaded1}, {skipped1}), "
             f"run2 ({loaded2}, {skipped2}) — files double-loaded or dropped"
         )
-    cached = (t, every)
-    _FIXTURES[key] = cached
-    return cached
+    return t, every
 
 
 @query(
     "copy_into_idempotent",
     # the four slices reassemble orders exactly — the oracle aggregates
     # the source, certifying no file loaded twice or dropped
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
+    oracle=_ORDERS_BY_PRIORITY,
 )
 def copy_into_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COPY INTO — file-level idempotent ingest (Delta's COPY INTO,
@@ -2775,34 +2452,20 @@ def copy_into_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"loaded {loaded}, skipped {skipped} of {len(every)} — the "
             "ingest ledger failed and a scheduled loader would double-load"
         )
-    return (
-        fresh.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(fresh.read())
 
 
+@_fixture(3)
 def _orders_rebucket_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the rebucket query: v1 = orders under 2
     buckets, v2 = rebucket(16), v3 = a single-row MERGE (min o_orderkey,
     price +777) under the evolved layout. Memoized per process (see
-    _FIXTURES)."""
+    _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), o, key="o_orderkey", n_buckets=2
+        spark, demo_path(demo), o, key="o_orderkey", n_buckets=2
     )
     t.rebucket(16)
     kmin = o.agg(F.min("o_orderkey")).collect()[0][0]
@@ -2811,7 +2474,6 @@ def _orders_rebucket_fixture(spark: SparkSession, sf_dir: str, demo: str):
             "o_totalprice", F.col("o_totalprice") + 777
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -2868,16 +2530,7 @@ def acid_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"single-key merge after rebucket rewrote {len(changed)} "
             "buckets — copy-on-write is not honoring the evolved spec"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
 @query(
@@ -2950,36 +2603,24 @@ def snapshot_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{n_pruned} planned files for the point lookup — the "
             "DataSource is scanning files the manifest can prove empty"
         )
-    return (
-        filtered
-        .groupBy((F.col("o_orderkey") % 3).cast("bigint").alias("key_mod"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+    return _priority_revenue(
+        filtered, by=(F.col("o_orderkey") % 3).cast("bigint").alias("key_mod")
     )
 
 
+@_fixture(3)
 def _orders_colmap_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the column-mapping query: v1 = even-key half
     of orders, v2 = RENAME COLUMN o_totalprice -> price_usd (metadata
     only), v3 = append of the odd-key half under the NEW logical name.
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 2 == 0),
         key="o_orderkey",
         n_buckets=4,
@@ -2988,7 +2629,6 @@ def _orders_colmap_fixture(spark: SparkSession, sf_dir: str, demo: str):
     t.append(
         o.where(k % 2 == 1).withColumnRenamed("o_totalprice", "price_usd")
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -3048,18 +2688,12 @@ def snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"pre-rename file stores {phys_names} — expected the OLD "
             "physical name; the mapping test is vacuous"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("price_usd").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue_usd"),
-        )
+    return _priority_revenue(
+        t.read(), aggs=[_revenue("price_usd", "revenue_usd")]
     )
 
 
+@_fixture(3)
 def _orders_sink_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the V2-sink query: v1 = even-key half of
     orders, v2 = the odd-key half written through
@@ -3067,21 +2701,15 @@ def _orders_sink_fixture(spark: SparkSession, sf_dir: str, demo: str):
     v3 = single-row MERGE of the minimum odd key (price +777) — the
     bucket-consistency certification: if the sink had mis-bucketed any
     row, the bucket-pruned merge would leave a duplicate behind.
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
     from ..sources.snapshot_source import register
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 2 == 0),
         key="o_orderkey",
         n_buckets=8,
@@ -3100,7 +2728,6 @@ def _orders_sink_fixture(spark: SparkSession, sf_dir: str, demo: str):
             "o_totalprice", F.col("o_totalprice") + 777
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -3152,21 +2779,13 @@ def snapshot_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{len(changed)} buckets — the sink's executor-side hash "
             "disagrees with Spark's bucketing"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
 # ---- value-partitioned layout (Delta's partitionBy) -------------------------
 
 
+@_fixture(3)
 def _partitioned_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Value-partitioned demo table (partition_by=o_orderpriority — 5
     partitions, key=o_orderkey, 4 hash buckets per partition):
@@ -3175,19 +2794,13 @@ def _partitioned_fixture(spark: SparkSession, sf_dir: str, demo: str):
     partition directories), v3 = DROP PARTITION '1-URGENT' (metadata
     only). All three partitioned-layout queries share this fixture so
     their oracles stay in lockstep; memoized per process (see
-    _FIXTURES)."""
+    _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(F.col("o_orderkey") % 10 < 8),
         key="o_orderkey",
         n_buckets=4,
@@ -3195,7 +2808,6 @@ def _partitioned_fixture(spark: SparkSession, sf_dir: str, demo: str):
     )
     t.append(o.where(F.col("o_orderkey") % 10 >= 8))
     t.drop_partition("1-URGENT")
-    _FIXTURES[key] = t
     return t
 
 
@@ -3241,15 +2853,9 @@ def snapshot_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"partition-pruned read touched foreign partition files: "
             f"{stray[:3]} — directory layout and composite ids disagree"
         )
-    return (
-        t.read(where=pred)
-        .groupBy((F.col("o_custkey") % 10).cast("bigint").alias("cust_band"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+    return _priority_revenue(
+        t.read(where=pred),
+        by=(F.col("o_custkey") % 10).cast("bigint").alias("cust_band"),
     )
 
 
@@ -3300,11 +2906,7 @@ def snapshot_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if any(_part_of(b) == "1-URGENT" for b in t._manifest(3)["files"]):
         raise RuntimeError("dropped partition still referenced by v3")
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(F.count("*").cast("bigint").alias("n_orders"))
-    )
+    return _priority_revenue(t.read(), aggs=[])
 
 
 @query(
@@ -3354,6 +2956,7 @@ def snapshot_describe_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_fixture(4)
 def _replace_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Partitioned demo history for replaceWhere + partition-scoped
     OPTIMIZE (shared so the two queries' oracles stay in lockstep):
@@ -3364,19 +2967,13 @@ def _replace_fixture(spark: SparkSession, sf_dir: str, demo: str):
     (o_totalprice + 1000, txn-tagged app_id='daily_load' batch_id=1 —
     the idempotent daily reload), v4 = OPTIMIZE partition '5-LOW' only.
     Final state: non-3-MEDIUM rows as ingested, all 3-MEDIUM rows
-    price-bumped. Memoized per process (see _FIXTURES)."""
+    price-bumped. Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(F.col("o_orderkey") % 10 < 8),
         key="o_orderkey",
         n_buckets=4,
@@ -3388,7 +2985,6 @@ def _replace_fixture(spark: SparkSession, sf_dir: str, demo: str):
     )
     t.replace_where("3-MEDIUM", revised, batch_id=1, app_id="daily_load")
     t.compact(partition="5-LOW")
-    _FIXTURES[key] = t
     return t
 
 
@@ -3473,16 +3069,7 @@ def snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     if t.latest_version() != before:
         raise RuntimeError("rejected replace_where still advanced the version")
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
 @query(
@@ -3553,18 +3140,13 @@ def acid_optimize_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"v4 commit record missing the partition scope: {rec!r}"
         )
-    return (
-        t.read(where=("o_orderpriority", "5-LOW", "5-LOW"))
-        .groupBy((F.col("o_custkey") % 10).cast("bigint").alias("cust_band"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+    return _priority_revenue(
+        t.read(where=("o_orderpriority", "5-LOW", "5-LOW")),
+        by=(F.col("o_custkey") % 10).cast("bigint").alias("cust_band"),
     )
 
 
+@_fixture(3)
 def _sink_partitioned_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the partitioned-V2-sink query: v1 = CREATE
     a value-partitioned table (partition_by=o_orderpriority, 4 hash
@@ -3575,21 +3157,15 @@ def _sink_partitioned_fixture(spark: SparkSession, sf_dir: str, demo: str):
     MERGE (+777 on the minimum sink-written key, same partition) — the
     composite-consistency certification: a mis-composited sink row would
     escape the merge's bucket-pruned rewrite and duplicate the key.
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
     from ..sources.snapshot_source import register
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 10 < 8),
         key="o_orderkey",
         n_buckets=4,
@@ -3609,7 +3185,6 @@ def _sink_partitioned_fixture(spark: SparkSession, sf_dir: str, demo: str):
             "o_totalprice", F.col("o_totalprice") + 777
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -3717,16 +3292,7 @@ def snapshot_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "partition-pruned read cannot see the sink-written merged key"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
 @query(
@@ -3795,6 +3361,7 @@ def snapshot_sql_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_fixture(3)
 def _dml_delete_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the predicate-DELETE query: v1 = orders,
     value-partitioned by priority; v2 = DELETE WHERE priority =
@@ -3802,19 +3369,13 @@ def _dml_delete_fixture(spark: SparkSession, sf_dir: str, demo: str):
     manifest metadata); v3 = merge-on-read DELETE WHERE o_orderkey <=
     max_key//10 (DV sidecar; the bound derives from the data so the
     victim set is nonempty at every sf and scaled corpus). Memoized per
-    process (see _FIXTURES)."""
+    process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o,
         key="o_orderkey",
         n_buckets=4,
@@ -3823,7 +3384,6 @@ def _dml_delete_fixture(spark: SparkSession, sf_dir: str, demo: str):
     t.delete(where=("o_orderpriority", "1-URGENT", "1-URGENT"))
     k_hi = o.agg(F.expr("max(o_orderkey) div 10")).first()[0]
     t.delete(where=("o_orderkey", 1, int(k_hi)), mode="dv")
-    _FIXTURES[key] = t
     return t
 
 
@@ -3878,18 +3438,10 @@ def acid_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             "DV DELETE wrote or rewrote data files — merge-on-read "
             "degraded to copy-on-write"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(3)
 def _dml_update_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the predicate-UPDATE query: v1 = orders,
     value-partitioned by priority; v2 = copy-on-write UPDATE SET
@@ -3901,16 +3453,10 @@ def _dml_update_fixture(spark: SparkSession, sf_dir: str, demo: str):
     append under the new partition's directory. Memoized per process."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o,
         key="o_orderkey",
         n_buckets=4,
@@ -3926,7 +3472,6 @@ def _dml_update_fixture(spark: SparkSession, sf_dir: str, demo: str):
         where=("o_orderkey", 1, int(k_hi)),
         mode="dv",
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -3999,18 +3544,10 @@ def acid_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "partition-moved rows invisible to a partition-pruned read"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(4)
 def _sql_dml_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history whose WRITE PATH IS SQL TEXT ONLY (VERDICT r7
     #3 — mr_spark/sql_dml.py): v1 = orders (key o_orderkey, partitioned
@@ -4023,21 +3560,15 @@ def _sql_dml_fixture(spark: SparkSession, sf_dir: str, demo: str):
     t.o_totalprice + s.o_totalprice WHEN NOT MATCHED THEN INSERT *``
     with src = every o_orderkey % 10 == 3 order at price 999.99 (some
     re-insert rows the v2 delete dropped — both engines replay that).
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
     from ..sql_dml import execute_dml
     from ..sources.snapshot_source import register_snapshot_view
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o,
         key="o_orderkey",
         n_buckets=4,
@@ -4068,7 +3599,6 @@ def _sql_dml_fixture(spark: SparkSession, sf_dir: str, demo: str):
                o_totalprice = t.o_totalprice + s.o_totalprice
            WHEN NOT MATCHED THEN INSERT *""",
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -4174,6 +3704,7 @@ def snapshot_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_fixture(4)
 def _sql_insert_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history whose write path — INCLUDING TABLE CREATION —
     is SQL text only (mr_spark/sql_dml.py): v1 = ``CREATE TABLE ...
@@ -4186,25 +3717,19 @@ def _sql_insert_fixture(spark: SparkSession, sf_dir: str, demo: str):
     partition overwrite: even-keyed 5-LOW orders at doubled price replace
     the whole partition, the source omitting the partition column; v4 =
     ``INSERT INTO ... VALUES`` with two data-derived keys above
-    MAX(o_orderkey). Memoized per process (see _FIXTURES)."""
+    MAX(o_orderkey). Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
     from ..sql_dml import execute_dml
     from ..sources.snapshot_source import _VIEW_BINDINGS
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     o.createOrReplaceTempView("mrspark_sqlins_src")
     # a rebuild (other-sf probe in the same process) must re-CREATE:
     # drop the stale binding first — DROP TABLE is external-location
     # semantics, the old pid-scoped dir is simply rebuilt over
     if "mrspark_sqlins" in _VIEW_BINDINGS:
         execute_dml(spark, "DROP TABLE mrspark_sqlins")
-    path = _snapshot_demo_path(demo)
+    path = demo_path(demo)
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
@@ -4237,7 +3762,6 @@ def _sql_insert_fixture(spark: SparkSession, sf_dir: str, demo: str):
         f"({mx + 2}, CAST(222.22 AS DOUBLE), '3-MEDIUM')",
     )
     t = SnapshotTable(spark, path)
-    _FIXTURES[key] = t
     return t
 
 
@@ -4321,6 +3845,7 @@ def snapshot_sql_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_fixture(4)
 def _convert_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version migration story for the in-place conversion query
     (SnapshotTable.convert — Delta's CONVERT TO DELTA analog): a RAW
@@ -4331,7 +3856,7 @@ def _convert_fixture(spark: SparkSession, sf_dir: str, demo: str):
     to files the engine never wrote); v3 = ``rebucket(4)`` — the
     convert-then-optimize step that localizes everything into a real
     hash layout; v4 = a single-key merge that must now rewrite exactly
-    one of the 4 buckets. Memoized per process (see _FIXTURES)."""
+    one of the 4 buckets. Memoized per process (see _fixture)."""
     import os
     import shutil
 
@@ -4339,19 +3864,13 @@ def _convert_fixture(spark: SparkSession, sf_dir: str, demo: str):
     from ..sql_dml import execute_dml
     from ..sources.snapshot_source import _VIEW_BINDINGS
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
     if "mrspark_conv" in _VIEW_BINDINGS:
         execute_dml(spark, "DROP TABLE mrspark_conv")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    raw = _snapshot_demo_path(demo + "_raw")
+    o = _orders(spark, sf_dir, custkey=False)
+    raw = demo_path(demo + "_raw")
     shutil.rmtree(raw, ignore_errors=True)
     o.repartition(4, "o_orderkey").write.parquet(raw)
-    path = _snapshot_demo_path(demo)
+    path = demo_path(demo)
     shutil.rmtree(path, ignore_errors=True)
     execute_dml(
         spark,
@@ -4372,7 +3891,6 @@ def _convert_fixture(spark: SparkSession, sf_dir: str, demo: str):
             "o_orderkey bigint, o_totalprice double, o_orderpriority string",
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -4443,18 +3961,10 @@ def snapshot_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"single-key merge rewrote {len(changed)} buckets — keyed "
             "pruning did not engage after rebucket"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(5)
 def _pred_grammar_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """5-version history for the generalized-predicate query (VERDICT
     r7 #1): v1 = orders (key o_orderkey, partitioned by priority) with
@@ -4468,13 +3978,9 @@ def _pred_grammar_fixture(spark: SparkSession, sf_dir: str, demo: str):
     the NULL-tag rows keep their price; v5 = DELETE WHERE status_tag IS
     NULL AND priority = '3-MEDIUM' — a null-test conjunct mixed with an
     exact partition atom, touching only that partition's files.
-    Memoized per process (see _FIXTURES)."""
+    Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 5)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 5):
-        return cached
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -4485,7 +3991,7 @@ def _pred_grammar_fixture(spark: SparkSession, sf_dir: str, demo: str):
     )
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o,
         key="o_orderkey",
         n_buckets=4,
@@ -4510,7 +4016,6 @@ def _pred_grammar_fixture(spark: SparkSession, sf_dir: str, demo: str):
             ("=", "o_orderpriority", "3-MEDIUM"),
         ]
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -4595,21 +4100,18 @@ def acid_predicate_grammar(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"IS NULL + partition conjunct touched bucket {b} "
                 "outside the 3-MEDIUM partition"
             )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
+    return _priority_revenue(
+        t.read(),
+        aggs=[
             F.sum(
                 F.when(F.col("status_tag").isNull(), 1).otherwise(0)
             ).cast("bigint").alias("n_null_tag"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
+            _revenue(),
+        ],
     )
 
 
+@_fixture(5)
 def _partition_evolution_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """5-version history for the partition-evolution query: v1 = CREATE
     unpartitioned from the non-'5-LOW' third of orders (the "we forgot
@@ -4622,20 +4124,14 @@ def _partition_evolution_fixture(spark: SparkSession, sf_dir: str, demo: str):
     MERGE doubling the '2-HIGH' v1 rows' prices — a cross-spec
     copy-on-write (the targets live in OLD-spec buckets, found through
     the spec-blind hash-suffix closure). Memoized per process (see
-    _FIXTURES)."""
+    _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 5)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 5):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     k = F.col("o_orderkey")
     a = o.where((k % 3 == 0) & (F.col("o_orderpriority") != "5-LOW"))
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), a, key="o_orderkey", n_buckets=4
+        spark, demo_path(demo), a, key="o_orderkey", n_buckets=4
     )
     t.set_partition_spec("o_orderpriority")
     t.append(o.where(k % 3 == 1))
@@ -4645,7 +4141,6 @@ def _partition_evolution_fixture(spark: SparkSession, sf_dir: str, demo: str):
             "o_totalprice", F.col("o_totalprice") * 2
         )
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -4736,18 +4231,12 @@ def acid_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "partition-pinned read did not prune the mixed-spec bucket map"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("revenue_cents"),
-        )
+    return _priority_revenue(
+        t.read(), aggs=[_cents("o_totalprice", "revenue_cents")]
     )
 
 
+@_fixture(4)
 def _hidden_partitioning_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history for the hidden-partitioning query: v1 = CREATE
     unpartitioned from the pre-Jan-21 events (the unpartitioned
@@ -4757,20 +4246,16 @@ def _hidden_partitioning_fixture(spark: SparkSession, sf_dir: str, demo: str):
     files stay put; v4 = drop_partition("2024-01-25") — the metadata-only
     day drop, legal across MIXED specs because every old file's ts
     [min, max] footer stats (stored as canonical ISO strings) PROVE it
-    ends before Jan 21. Memoized per process (see _FIXTURES)."""
+    ends before Jan 21. Memoized per process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     cut = "2024-01-21 00:00:00"
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         ev.where(F.col("ts") < cut),
         key="event_id",
         n_buckets=4,
@@ -4778,7 +4263,6 @@ def _hidden_partitioning_fixture(spark: SparkSession, sf_dir: str, demo: str):
     t.set_partition_spec(("days", "ts"))
     t.append(ev.where(F.col("ts") >= cut))
     t.drop_partition("2024-01-25")
-    _FIXTURES[key] = t
     return t
 
 
@@ -4888,26 +4372,21 @@ def acid_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.countDistinct(F.to_date("ts")).cast("bigint").alias("n_days"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("value_cents"),
+            _cents("value", "value_cents"),
         )
     )
 
 
+@_fixture(3)
 def _widen_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the type-widening query: v1 = even-key
     orders with o_totalprice narrowed to FLOAT; v2 = widen_column to
     DOUBLE (metadata-only — zero files moved); v3 = append of the
     odd-key half STILL CARRYING FLOAT (narrow sources upcast on entry
     after a widen, so old pipelines keep writing). Memoized per
-    process (see _FIXTURES)."""
+    process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_totalprice").cast("float").alias("price"),
@@ -4916,14 +4395,13 @@ def _widen_fixture(spark: SparkSession, sf_dir: str, demo: str):
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 2 == 0),
         key="o_orderkey",
         n_buckets=4,
     )
     t.widen_column("price", "double")
     t.append(o.where(k % 2 == 1))  # still float: upcasts on entry
-    _FIXTURES[key] = t
     return t
 
 
@@ -4977,35 +4455,21 @@ def acid_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
             "schema did not widen live (or time travel lost the narrow "
             "pre-widen schema)"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.sum(F.round(F.col("price") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("revenue_cents"),
-        )
-    )
+    return _priority_revenue(t.read(), aggs=[_cents("price", "revenue_cents")])
 
 
+@_fixture(3)
 def _analyze_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the ANALYZE query: v1 = orders; v2 = a
     hand-committed stats strip simulating a LEGACY writer (min/max kept,
     null counts removed — what pre-null-count manifests look like);
     v3 = analyze() recomputing full stats metadata-only. Memoized per
-    process (see _FIXTURES)."""
+    process (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), o, key="o_orderkey", n_buckets=4
+        spark, demo_path(demo), o, key="o_orderkey", n_buckets=4
     )
     m = t._manifest(1)
     legacy = t._next_manifest(
@@ -5018,20 +4482,10 @@ def _analyze_fixture(spark: SparkSession, sf_dir: str, demo: str):
     )
     t._commit(legacy, 1, op={"operation": "LEGACY STATS"})
     t.analyze()
-    _FIXTURES[key] = t
     return t
 
 
-@query(
-    "acid_analyze_stats",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("acid_analyze_stats", oracle=_ORDERS_BY_PRIORITY)
 def acid_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE / COMPUTE STATISTICS (SnapshotTable.analyze —
     mr_spark/acid.py): recompute every live file's manifest stats from
@@ -5073,54 +4527,30 @@ def acid_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "analyzed stats failed to prove full coverage — the "
             "metadata-only DELETE upgrade is broken"
         )
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(4)
 def _bloom_lifecycle_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history for the bloom-lifecycle query: v1 = orders with
     NO bloom index; v2 = ADD BLOOM INDEX o_orderkey (metadata-only —
     new writes build blooms, existing files unindexed); v3 = analyze()
     retro-building blooms for every live file; v4 = DROP BLOOM INDEX
     (metadata-only — stored blooms become inert). Memoized per process
-    (see _FIXTURES)."""
+    (see _fixture)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir, custkey=False)
     t = SnapshotTable.create(
-        spark, _snapshot_demo_path(demo), o, key="o_orderkey", n_buckets=8
+        spark, demo_path(demo), o, key="o_orderkey", n_buckets=8
     )
     t.add_bloom_index("o_orderkey")
     t.analyze()
     t.drop_bloom_index("o_orderkey")
-    _FIXTURES[key] = t
     return t
 
 
-@query(
-    "acid_bloom_lifecycle",
-    oracle="""
-    SELECT o_orderpriority AS priority,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS revenue
-    FROM orders GROUP BY 1
-    """,
-)
+@query("acid_bloom_lifecycle", oracle=_ORDERS_BY_PRIORITY)
 def acid_bloom_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLOOM INDEX LIFECYCLE (add_bloom_index / drop_bloom_index —
     mr_spark/acid.py): both ALTERs are METADATA-ONLY commits. ADD means
@@ -5175,18 +4605,10 @@ def acid_bloom_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if got != [int(key0)]:
         raise RuntimeError("point lookup after drop lost exactness")
-    return (
-        t.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(t.read())
 
 
+@_fixture(4)
 def _transform_calendar_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """4-version history for the months() calendar-transform query:
     v1 = pre-1995 orders, unpartitioned (spec 0); v2 = evolve to
@@ -5198,17 +4620,13 @@ def _transform_calendar_fixture(spark: SparkSession, sf_dir: str, demo: str):
     month string must compare <= its own date stats)."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 4)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 4):
-        return cached
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
     cut = "1995-01-01"
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(F.col("o_orderdate") < cut),
         key="o_orderkey",
         n_buckets=4,
@@ -5216,7 +4634,6 @@ def _transform_calendar_fixture(spark: SparkSession, sf_dir: str, demo: str):
     t.set_partition_spec(("months", "o_orderdate"))
     t.append(o.where(F.col("o_orderdate") >= cut))
     t.drop_partition("1997-03")
-    _FIXTURES[key] = t
     return t
 
 
@@ -5317,18 +4734,14 @@ def acid_transform_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"exactly the month's {len(june)} — prefix pruning or date "
             "stats skipping broke"
         )
-    return (
-        t.read()
-        .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("revenue_cents"),
-        )
+    return _priority_revenue(
+        t.read(),
+        by=F.date_format("o_orderdate", "yyyy-MM").alias("month"),
+        aggs=[_cents("o_totalprice", "revenue_cents")],
     )
 
 
+@_fixture(3)
 def _sink_hidden_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """3-version history for the transformed-spec V2 sink query: v1 =
     pre-Jan-21 events, unpartitioned; v2 = evolve to days(ts); v3 =
@@ -5339,17 +4752,13 @@ def _sink_hidden_fixture(spark: SparkSession, sf_dir: str, demo: str):
     from ..acid import SnapshotTable
     from ..sources.snapshot_source import register
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     cut = "2024-01-21 00:00:00"
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         ev.where(F.col("ts") < cut),
         key="event_id",
         n_buckets=4,
@@ -5363,7 +4772,6 @@ def _sink_hidden_fixture(spark: SparkSession, sf_dir: str, demo: str):
         .option("path", t.path)
         .save()
     )
-    _FIXTURES[key] = t
     return t
 
 
@@ -5454,13 +4862,12 @@ def snapshot_sink_hidden(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.countDistinct(F.to_date("ts")).cast("bigint").alias("n_days"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("value_cents"),
+            _cents("value", "value_cents"),
         )
     )
 
 
+@_fixture(3)
 def _rowid_upstream_fixture(spark: SparkSession, sf_dir: str, demo: str):
     """Row-TRACKED upstream with the same v1/v2/v3 fractions as
     _orders_cdc_fixture (so _RECOMPUTE_V3 replays it): v1 = %10<8
@@ -5469,17 +4876,11 @@ def _rowid_upstream_fixture(spark: SparkSession, sf_dir: str, demo: str):
     a stable hidden ``_row_id`` and the change feed always emits it."""
     from ..acid import SnapshotTable
 
-    key = (sf_dir, demo, 3)
-    cached = _FIXTURES.get(key)
-    if _fixture_alive(cached, spark, 3):
-        return cached
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
+    o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
     t = SnapshotTable.create(
         spark,
-        _snapshot_demo_path(demo),
+        demo_path(demo),
         o.where(k % 10 < 8),
         key="o_orderkey",
         n_buckets=8,
@@ -5491,7 +4892,6 @@ def _rowid_upstream_fixture(spark: SparkSession, sf_dir: str, demo: str):
         )
     )
     t.delete_keys(o.where((k % 10).isin(0, 1)).select("o_orderkey"))
-    _FIXTURES[key] = t
     return t
 
 
@@ -5544,7 +4944,7 @@ def cdf_replication_rowid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     dst = SnapshotTable.create(
         spark,
-        _snapshot_demo_path("acid_rowiddst_demo"),
+        demo_path("acid_rowiddst_demo"),
         src.read(version=1, with_row_ids=True),
         key="_row_id",
         n_buckets=8,
@@ -5587,13 +4987,4 @@ def cdf_replication_rowid(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"wrong refusal for a row-id-less feed: {ex}"
             ) from ex
-    return (
-        dst.read()
-        .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
+    return _priority_revenue(dst.read())

@@ -411,8 +411,11 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
             enc.indices.cast(pa.int64()), len(enc.dictionary)
         ).to_numpy()
         n_groups = len(enc.dictionary) + 1
-        tot_old = np.bincount(gid, weights=np.where(d < 0, -d, 0), minlength=n_groups)
-        tot_new = np.bincount(gid, weights=np.where(d > 0, d, 0), minlength=n_groups)
+        # exact int64 totals: the update test below compares them to 1
+        tot_old = np.zeros(n_groups, dtype=np.int64)
+        tot_new = np.zeros(n_groups, dtype=np.int64)
+        np.add.at(tot_old, gid, np.maximum(-d, 0))
+        np.add.at(tot_new, gid, np.maximum(d, 0))
         is_upd = (tot_old[gid] == 1) & (tot_new[gid] == 1)
         ct = np.where(
             d < 0,

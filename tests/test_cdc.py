@@ -120,3 +120,27 @@ def test_apply_changes_merge_schema_evolves_replica(spark, tmp_path):
     assert h[v]["params"]["schema_evolved"] is True
     fresh = SnapshotTable(spark, t.path)
     assert fresh.read().columns == ["k", "v", "score"]
+
+
+def test_fixture_memo_rebuilds_after_other_sf_dir(spark, duck, tmp_path):
+    """Demo tables live at one pid-scoped path per demo name, so running
+    the same queries for a second sf_dir rebuilds them there. Coming
+    back to the first sf_dir must rebuild again instead of reusing a
+    memoized handle whose files are gone — also for the fixtures that
+    return a (table, extra) tuple (the scale-probe pattern: sf A, sf B,
+    sf A in one process). sf B is a copy of sf A, so one oracle serves
+    both."""
+    import shutil
+
+    from mr_spark import operators as ops
+    from mr_spark.oracle import diff
+
+    sf_b = str(tmp_path / "sf_b")
+    shutil.copytree(SF_DIR, sf_b)
+    queries, oracles = ops.queries(), ops.oracle_sql()
+    names = ("snapshot_clone_shallow", "copy_into_idempotent", "acid_merge_upsert")
+    for sf in (SF_DIR, sf_b, SF_DIR):
+        for name in names:
+            got = queries[name](spark, sf).toPandas()
+            problems = diff(got, duck.execute(oracles[name]).fetchdf())
+            assert not problems, f"{name} @ {sf}: {problems}"

@@ -34,7 +34,10 @@ def test_mkdtemp_scratch_lives_under_pid_parent(tmp_path, monkeypatch):
     assert os.path.basename(parent).rsplit("_", 1)[-1].isdigit()
 
 
-def test_sweep_reclaims_dead_pid_and_old_unparseable(tmp_path, monkeypatch):
+def test_sweep_reclaims_dead_pid_and_old_unparseable(
+    tmp_path, monkeypatch, caplog
+):
+    import logging
     import time
 
     dead = tmp_path / "acid_demo_999999999"  # no such pid
@@ -42,13 +45,21 @@ def test_sweep_reclaims_dead_pid_and_old_unparseable(tmp_path, monkeypatch):
     old = tmp_path / "mrspark_dedup_abc123"  # legacy random suffix
     old.mkdir()
     os.utime(old, (time.time() - 2 * _demo._STALE_AGE_SECS,) * 2)
+    foreign = tmp_path / "someone_elses_cache"  # not a mkdtemp_scratch name
+    foreign.mkdir()
+    os.utime(foreign, (time.time() - 2 * _demo._STALE_AGE_SECS,) * 2)
     fresh = tmp_path / "mrspark_dedup_xyz"  # recent: a live session's dir
     fresh.mkdir()
     mine = tmp_path / f"live_{os.getpid()}"
     mine.mkdir()
     monkeypatch.setattr(_demo, "_SWEPT", False)
-    _demo._sweep_stale(str(tmp_path))
+    with caplog.at_level(logging.INFO, logger=_demo.__name__):
+        _demo._sweep_stale(str(tmp_path))
     assert not dead.exists()
     assert not old.exists()
     assert fresh.exists()
     assert mine.exists()
+    assert foreign.exists()  # the age sweep only judges mrspark_* dirs
+    logged = caplog.text
+    assert str(dead) in logged and str(old) in logged
+    assert str(foreign) not in logged
