@@ -3,7 +3,10 @@
 
 Prints ONE JSON line:
   {"metric": "total_query_seconds", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+   "queries": {name: sec, ...}, "sf": 0.1, "cpus": C}
+
+``cpus`` is the session's defaultParallelism — the core count the numbers
+were taken at.
 
 Each query is forced end-to-end with a noop sink (full plan execution,
 no driver-side collect cost). Session startup is excluded; a warm-up
@@ -49,6 +52,7 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     queries = ops.queries()
     # warm-up: JVM JIT + codegen + parquet footer caches
@@ -95,6 +99,7 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "sf": sf,
+                "cpus": cpus,
                 "n_queries": len(timings),
                 "passes": n_passes,
                 "queries": timings,
@@ -115,6 +120,7 @@ def main() -> None:
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",
                 "sf": sf,
+                "cpus": cpus,
                 "n_queries": len(timings),
                 "queries": {k: timings[k] for k in headline if k in timings},
                 "detail": "BENCH_DETAIL.json",

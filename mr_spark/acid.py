@@ -2959,7 +2959,7 @@ class SnapshotTable:
             # a clone's v1 is its whole history, so the clone RESOLVES
             # the pre-set now and PINS it explicitly ("pre"), mapped
             # through the clone's entry mapping (deep clones may rename
-            # colliding basenames) — see add_column / _read_files
+            # colliding basenames) — see add_column / _scan
             defaults = {}
             for c, d in m["defaults"].items():
                 pre_src = self._pre_default_basenames(d)
@@ -3098,12 +3098,7 @@ class SnapshotTable:
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         rows = self._read_files(
-            [
-                self._entry_full(rel)
-                for rels in m["files"].values()
-                for rel in rels
-            ],
-            m,
+            [rel for rels in m["files"].values() for rel in rels], m
         ).withColumn("__bucket", self._bucket_expr(m, n_buckets))
         new_files, new_stats = self._write_bucket_files(rows, m)
         nxt = self._next_manifest(m, new_files, new_stats, dvs={})
@@ -3453,16 +3448,8 @@ class SnapshotTable:
         surviving file may still hold out-of-range rows (ranges are
         coarse, blooms have ~1% false positives), so the caller applies
         the actual row filter too."""
-        from .predicates import conjunct_verdict
-
         m = self._manifest(version if version is not None else self.latest_version())
-        stats = m.get("stats", {})
         conjuncts = self._where_list(where)
-        # predicates arrive under LOGICAL names; stats/blooms are keyed by
-        # the PHYSICAL in-file names (column mapping)
-        phys_of = lambda c: self._phys(m, c)  # noqa: E731
-        bloom_phys = set(self._bloom_cols_phys(m))
-        time_cols = self._time_cols_phys(m)
         # PARTITION PRUNING (value-partitioned layout): a conjunct that
         # pins the partition column to a finite value set (equality,
         # point range, IN-list, OR of points) eliminates whole
@@ -3472,48 +3459,69 @@ class SnapshotTable:
         # (typed comparisons; the composite carries only the string
         # form). last_partition_prune records the ladder for
         # certification.
-        # PARTITION PRUNING first: each bucket judged under ITS OWN
-        # spec (mixed layouts after evolution; transforms answer range
-        # shapes, identity answers points) — see _prune_bucket_map
-        self.last_partition_prune = None
-        buckets = self._prune_bucket_map(m, conjuncts)
-        if len(buckets) != len(m["files"]):
-            self.last_partition_prune = {
-                "total_buckets": len(m["files"]),
-                "kept_buckets": len(buckets),
-            }
-        # per-file: drop only files PROVEN disjoint with some conjunct
-        # (blooms probe only CURRENTLY-indexed columns — a dropped
-        # index's stale per-file blooms stay in the stats, immutable
-        # files, but must be inert: a later widen_column changes the
-        # canonical probe text and a stale probe would false-negative)
-        paths = []
-        for b, rels in buckets.items():
+        kept = self._prune_bucket_map(m, conjuncts)
+        self.last_partition_prune = (
+            {"total_buckets": len(m["files"]), "kept_buckets": len(kept)}
+            if len(kept) != len(m["files"])
+            else None
+        )
+        plan = self._plan_files(m, conjuncts, files=kept, use_blooms=use_blooms)
+        return [self._entry_full(rel) for _, rel, _ in plan]
+
+    def _plan_files(
+        self,
+        m: dict,
+        conjuncts: list,
+        files: dict | None = None,
+        use_blooms: bool = True,
+    ) -> list[tuple[str, str, bool]]:
+        """THE file plan of every predicate read, DML and DataSource
+        split: ``[(bucket, rel, covered)]`` for the manifest files
+        (``files``: a subset of ``m["files"]``) that some row matching
+        ``conjuncts`` may live in. Buckets are pruned first under their
+        own spec (``_prune_bucket_map``), then each file is judged by
+        ``conjunct_verdict`` per conjunct: a file PROVEN disjoint with
+        any conjunct is dropped; ``covered`` is True iff every conjunct
+        PROVES every row matches (no conjunct: True). Predicates arrive
+        under LOGICAL names; stats and blooms are keyed by the PHYSICAL
+        in-file names (column mapping). Pure manifest work — the
+        Spark-less handle plans DataSource splits with it too."""
+        from .predicates import conjunct_verdict
+
+        if files is not None:
+            m = dict(m, files=files)
+        stats = m.get("stats", {})
+        # blooms probe only CURRENTLY-indexed columns — a dropped
+        # index's stale per-file blooms stay in the stats (immutable
+        # files) but must be inert: a later widen_column changes the
+        # canonical probe text and a stale probe would false-negative
+        kw = dict(
+            phys_of=lambda c: self._phys(m, c),
+            bloom_phys=set(self._bloom_cols_phys(m)),
+            use_blooms=use_blooms,
+            bloom_might_contain=_bloom_might_contain,
+            int_cols=self._int_cols_phys(m),
+            time_cols=self._time_cols_phys(m),
+        )
+        plan = []
+        for b, rels in self._prune_bucket_map(m, conjuncts).items():
             spec = self._bucket_spec(m, b)
             # exact pval claims are identity-only: a transformed value
             # is a range statement, already applied at the bucket map
             pcol = spec["column"] if _spec_identity(spec) else None
             pval = _part_of(b) if pcol else None
             for rel in rels:
-                fstats = stats.get(rel, {})
-                if any(
-                    conjunct_verdict(
-                        atoms,
-                        fstats,
-                        phys_of=phys_of,
-                        pval=pval,
-                        pcol=pcol,
-                        bloom_phys=bloom_phys,
-                        use_blooms=use_blooms,
-                        bloom_might_contain=_bloom_might_contain,
-                        time_cols=time_cols,
+                covered = True
+                for atoms in conjuncts:
+                    v = conjunct_verdict(
+                        atoms, stats.get(rel, {}), pval=pval, pcol=pcol, **kw
                     )
-                    == "disjoint"
-                    for atoms in conjuncts
-                ):
-                    continue
-                paths.append(os.path.join(self.path, rel))
-        return paths
+                    if v == "disjoint":
+                        break
+                    covered = covered and v == "covered"
+                else:
+                    plan.append((b, rel, covered))
+        return plan
 
     def read(
         self,
@@ -3535,7 +3543,9 @@ class SnapshotTable:
         if version is None:
             version = self.latest_version()
         m = self._manifest(version)
-        df = self._read_files(self.data_paths(version, where), m)
+        df = self._read_files(
+            [self._mkey(p) for p in self.data_paths(version, where)], m
+        )
         if self._where_list(where):
             df = df.where(self._pred_expr(where))
         if not with_row_ids and "_row_id" in m.get("identity", {}):
@@ -3543,21 +3553,17 @@ class SnapshotTable:
         return df
 
     def _read_files(
-        self, paths: list[str], m: dict, dv_m: dict | None = None
+        self, rels: list[str], m: dict, dv_m: dict | None = None
     ) -> DataFrame:
-        """Read a file list as the table's rows, under the MANIFEST's
-        schema (the log owns the schema, exactly Delta): files written
-        before a schema evolution lack the new columns and read as NULLs;
-        an empty list yields an empty frame with that schema (all rows
-        deleted, a table created ahead of its stream, or a zero-bucket
-        slice).
-
-        DELETION VECTORS (merge-on-read): rows whose (file, row position)
-        appears in a DV referenced by the manifest are filtered out with
-        an anti-join on ``_metadata.row_index`` — zero overhead when no
-        DV touches the scanned files. ``dv_m`` lets the change feed apply
-        each VERSION'S OWN deletion vectors while reading both slices
-        under the newer schema (default: same manifest as the schema).
+        """Read manifest entries as the table's rows, under the
+        MANIFEST's schema (the log owns the schema, exactly Delta): files
+        written before a schema evolution lack the new columns and read
+        as NULLs; an empty list yields an empty frame with that schema
+        (all rows deleted, a table created ahead of its stream, or a
+        zero-bucket slice). Initial defaults and deletion vectors apply
+        as in ``_scan``; ``dv_m`` lets the change feed apply each
+        VERSION'S OWN deletion vectors while reading both slices under
+        the newer schema (default: same manifest as the schema).
 
         COLUMN MAPPING: the scan requests the PHYSICAL schema (what the
         files store); the final projection renames to the manifest's
@@ -3566,28 +3572,63 @@ class SnapshotTable:
         from pyspark.sql.types import StructType
 
         logical = StructType.fromJson(json.loads(m["schema"]))
-        cmap = self._colmap(m)
-        if not paths:
+        if not rels:
             return self.spark.createDataFrame([], logical)
-        df = self.spark.read.schema(self._physical_schema(m)).parquet(*paths)
+        df = self._scan(m, rels, dv_m)
+        cmap = self._colmap(m)
+        if not cmap:
+            return df
+        return df.select(
+            *[F.col(cmap.get(f.name, f.name)).alias(f.name) for f in logical.fields]
+        )
+
+    def _scan(
+        self,
+        m: dict,
+        rels: list[str],
+        dv_m: dict | None = None,
+        tag: bool = False,
+    ) -> DataFrame:
+        """THE scan of manifest entries as live rows, under PHYSICAL
+        column names: initial column defaults filled, rows dead under
+        the deletion vectors of ``dv_m`` (default ``m``) removed.
+
+        DELETION VECTORS (merge-on-read): rows whose (file, row position)
+        appears in a DV referenced by the scanned entries are filtered
+        out with an anti-join on ``_metadata.row_index`` — zero overhead
+        when no DV touches the scanned files: a DV-free scan gains no
+        ``_metadata`` column. ``tag=True`` keeps the bookkeeping columns
+        ``__dv_file`` / ``__dv_pos`` — the front half of every
+        merge-on-read DML path, which names its victims by them."""
+        from pyspark.sql.types import StructType
+
+        df = self.spark.read.schema(self._physical_schema(m)).parquet(
+            *[self._entry_full(rel) for rel in rels]
+        )
+        cols = df.columns
+        fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
         # INITIAL column defaults (add_column): rows of files predating
         # the alter read the recorded default — a metadata-only backfill.
         # The fill keys on pre-set MEMBERSHIP, not on NULLness: a
         # post-alter row may hold a genuine NULL, and a pre-file's rows
-        # are ALL fills (the physical column is absent there)
+        # are ALL fills (the physical column is absent there). DML scans
+        # need it too, or a predicate DELETE/UPDATE on a defaulted column
+        # would silently miss pre-alter rows.
         inits = {
             c: d
             for c, d in m.get("defaults", {}).items()
             if d.get("initial") is not None
         }
         if inits:
-            types = {f.name: f.dataType for f in logical.fields}
-            fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+            types = {
+                f.name: f.dataType
+                for f in StructType.fromJson(json.loads(m["schema"])).fields
+            }
             for c, d in inits.items():
                 pre = self._pre_default_basenames(d)
                 if not pre:
                     continue
-                phys = cmap.get(c, c)
+                phys = self._phys(m, c)
                 df = df.withColumn(
                     phys,
                     F.when(
@@ -3595,45 +3636,24 @@ class SnapshotTable:
                         F.lit(d["initial"]).cast(types[c]),
                     ).otherwise(F.col(phys)),
                 )
-
-        def to_logical(frame: DataFrame) -> DataFrame:
-            if not cmap:
-                return frame
-            return frame.select(
-                *[
-                    F.col(cmap.get(f.name, f.name)).alias(f.name)
-                    for f in logical.fields
-                ]
-            )
-
         dvs = (dv_m if dv_m is not None else m).get("dvs", {})
-        if not dvs:
-            return to_logical(df)
-        needed = sorted(
-            {dv for p in paths for dv in dvs.get(self._mkey(p), [])}
-        )
-        if not needed:
-            return to_logical(df)
-        cols = df.columns
-        fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        tagged = df.withColumn("__dv_file", fname).withColumn(
-            "__dv_pos", F.col("_metadata.row_index")
-        )
-        dead = (
-            self.spark.read.parquet(
-                *[os.path.join(self.path, d) for d in needed]
+        needed = sorted({dv for rel in rels for dv in dvs.get(rel, [])})
+        if tag or needed:
+            df = df.withColumn("__dv_file", fname).withColumn(
+                "__dv_pos", F.col("_metadata.row_index")
             )
+        if not needed:
+            return df
+        dead = (
+            self.spark.read.parquet(*[self._entry_full(d) for d in needed])
             .select(
                 F.col("data_file").alias("__dv_file"),
                 F.col("pos").alias("__dv_pos"),
             )
             .distinct()
         )
-        return to_logical(
-            tagged.join(dead, ["__dv_file", "__dv_pos"], "left_anti").select(
-                *cols
-            )
-        )
+        df = df.join(dead, ["__dv_file", "__dv_pos"], "left_anti")
+        return df if tag else df.select(*cols)
 
     def _next_manifest(
         self,
@@ -3822,7 +3842,7 @@ class SnapshotTable:
                 "merge sources cannot provide its values"
             )
         if old_rels:
-            target = self._read_files([self._entry_full(r) for r in old_rels], m)
+            target = self._read_files(old_rels, m)
             keep = target.join(
                 src.select(key).distinct(), key, "left_anti"
             )
@@ -4131,7 +4151,7 @@ class SnapshotTable:
                 m, [str(r["__bucket"]) for r in bucket_rows]
             )
         old_rels = [rel for b in affected for rel in m["files"].get(b, [])]
-        target = self._read_files([self._entry_full(r) for r in old_rels], m)
+        target = self._read_files(old_rels, m)
         t_row = target.select(
             F.col(join_key).alias("__tk"),
             F.struct(*[F.col(c) for c in target.columns]).alias("t"),
@@ -4512,58 +4532,26 @@ class SnapshotTable:
         skipping those rows would corrupt the operation's contract."""
         if not m.get("partition_specs"):
             return
-        from .predicates import conjunct_verdict
-
         atom = self._target_conjunct(spec, value)
-        conjuncts = self._where_list([atom]) if atom is not None else None
-        stats = m.get("stats", {})
-        phys_of = lambda c: self._phys(m, c)  # noqa: E731
-        bloom_phys = set(self._bloom_cols_phys(m))
-        int_cols = self._int_cols_phys(m)
-        time_cols = self._time_cols_phys(m)
+        conjuncts = self._where_list([atom]) if atom is not None else []
         dsid = m.get("default_spec_id", 0)
         foreign = {
             b: rels for b, rels in m["files"].items() if _sid_of(b) != dsid
         }
-        if conjuncts is not None and foreign:
-            # bucket-level shortcut first: a foreign bucket's OWN value
-            # can prove disjointness (e.g. another day's bucket vs a
-            # day-interval target) before any per-file stats
-            mm = dict(m)
-            mm["files"] = foreign
-            foreign = self._prune_bucket_map(mm, conjuncts)
-        for b, rels in foreign.items():
-            fspec = self._bucket_spec(m, b)
-            pcol_b = fspec["column"] if _spec_identity(fspec) else None
-            pval = _part_of(b) if pcol_b else None
-            for rel in rels:
-                verdicts = (
-                    [
-                        conjunct_verdict(
-                            atoms,
-                            stats.get(rel, {}),
-                            phys_of=phys_of,
-                            pval=pval,
-                            pcol=pcol_b,
-                            bloom_phys=bloom_phys,
-                            bloom_might_contain=_bloom_might_contain,
-                            int_cols=int_cols,
-                            time_cols=time_cols,
-                        )
-                        for atoms in conjuncts
-                    ]
-                    if conjuncts is not None
-                    else []
-                )
-                if not any(v == "disjoint" for v in verdicts):
-                    raise ValueError(
-                        f"{op}({value!r}): live file {rel!r} was written "
-                        "under a different partition spec and its stats "
-                        "cannot prove it free of the targeted value — "
-                        "use delete(where=...) / predicate DML, or "
-                        "compact(migrate_specs=True) to migrate old "
-                        "buckets to the current spec first"
-                    )
+        # the file plan prunes buckets first: a foreign bucket's OWN
+        # value can prove disjointness (e.g. another day's bucket vs a
+        # day-interval target) before any per-file stats; no target
+        # interval (atom None) proves nothing, so every file is planned
+        plan = self._plan_files(m, conjuncts, files=foreign)
+        if plan:
+            raise ValueError(
+                f"{op}({value!r}): live file {plan[0][1]!r} was written "
+                "under a different partition spec and its stats "
+                "cannot prove it free of the targeted value — "
+                "use delete(where=...) / predicate DML, or "
+                "compact(migrate_specs=True) to migrate old "
+                "buckets to the current spec first"
+            )
 
     def drop_partition(self, value) -> int:
         """Retire one partition of a value-partitioned table as a
@@ -4907,7 +4895,7 @@ class SnapshotTable:
         old_rels = [rel for b in affected for rel in m["files"].get(b, [])]
         if old_rels:
             remaining = (
-                self._read_files([self._entry_full(r) for r in old_rels], m)
+                self._read_files(old_rels, m)
                 .join(k.drop("__bucket"), key, "left_anti")
                 .withColumn("__bucket", self._bucket_expr(m))
             )
@@ -4951,28 +4939,18 @@ class SnapshotTable:
         rels = [rel for b in affected for rel in m["files"].get(b, [])]
         if not rels:
             return base  # no bucket holds these keys — nothing to delete
-        # metadata-column scan reads the files directly, so it requests
-        # the PHYSICAL schema and the key's physical name (column mapping)
-        fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        scan = (
-            self.spark.read.schema(self._physical_schema(m))
-            .parquet(*[os.path.join(self.path, rel) for rel in rels])
+        # the DV-aware scan excludes already-dead rows (re-deleting is a
+        # no-op); it carries PHYSICAL names, so the key's too
+        hits = (
+            self._scan(m, rels, tag=True)
             .select(
                 F.col(self._phys(m, key)).alias("__k"),
-                fname.alias("data_file"),
-                F.col("_metadata.row_index").alias("pos"),
+                F.col("__dv_file").alias("data_file"),
+                F.col("__dv_pos").alias("pos"),
             )
+            .join(k.select(F.col(key).alias("__k")), "__k", "left_semi")
+            .select("data_file", "pos")
         )
-        dvs = dict(m.get("dvs", {}))
-        already = sorted({dv for rel in rels for dv in dvs.get(rel, [])})
-        if already:
-            dead0 = self.spark.read.parquet(
-                *[os.path.join(self.path, d) for d in already]
-            ).select("data_file", "pos").distinct()
-            scan = scan.join(dead0, ["data_file", "pos"], "left_anti")
-        hits = scan.join(
-            k.select(F.col(key).alias("__k")), "__k", "left_semi"
-        ).select("data_file", "pos")
         # one sidecar per commit: O(|deleted|) rows, coalesced like
         # Delta's single DV blob; lands under data/ with a uuid name so
         # vacuum's unreferenced-file sweep covers it too
@@ -5082,7 +5060,7 @@ class SnapshotTable:
         Everything unprovable lands in straddling, whose row-level
         filter keeps the result exact — the same advisory-pruning
         contract as data_paths()."""
-        from .predicates import conjunct_verdict, pred_columns
+        from .predicates import pred_columns
 
         conjuncts = self._where_list(where)
         names = self._schema_names(m)
@@ -5092,45 +5070,10 @@ class SnapshotTable:
                 f"predicate references columns not in the table schema: "
                 f"{unknown}"
             )
-        stats = m.get("stats", {})
-        bloom_phys = set(self._bloom_cols_phys(m))
-        int_cols = self._int_cols_phys(m)
-        time_cols = self._time_cols_phys(m)
-        phys_of = lambda c: self._phys(m, c)  # noqa: E731
         full: dict[str, list] = {}
         straddle: dict[str, list] = {}
-        # bucket-map pruning first: a bucket provably disjoint under its
-        # own spec contributes no files to either class (its files are
-        # all disjoint — same proof, applied once per bucket); a
-        # transformed bucket's value is a RANGE claim, so only identity
-        # specs pass exact pval/pcol to the per-file verdicts below
-        pruned_map = self._prune_bucket_map(m, conjuncts)
-        for b, rels in pruned_map.items():
-            spec = self._bucket_spec(m, b)
-            pcol = spec["column"] if _spec_identity(spec) else None
-            pval = _part_of(b) if pcol else None
-            for rel in rels:
-                fstats = stats.get(rel, {})
-                verdicts = [
-                    conjunct_verdict(
-                        atoms,
-                        fstats,
-                        phys_of=phys_of,
-                        pval=pval,
-                        pcol=pcol,
-                        bloom_phys=bloom_phys,
-                        bloom_might_contain=_bloom_might_contain,
-                        int_cols=int_cols,
-                        time_cols=time_cols,
-                    )
-                    for atoms in conjuncts
-                ]
-                if any(v == "disjoint" for v in verdicts):
-                    continue
-                if all(v == "covered" for v in verdicts):
-                    full.setdefault(b, []).append(rel)
-                else:
-                    straddle.setdefault(b, []).append(rel)
+        for b, rel, covered in self._plan_files(m, conjuncts):
+            (full if covered else straddle).setdefault(b, []).append(rel)
         return full, straddle
 
     def _write_dv_sidecar(self, hits: DataFrame) -> tuple[str, int, set]:
@@ -5166,62 +5109,6 @@ class SnapshotTable:
                 .to_pylist()
             )
         return dv_rel, n, victims
-
-    def _dv_scan(self, m: dict, rels: list[str]):
-        """Raw physical scan of manifest entries with DV bookkeeping
-        columns (__dv_file, __dv_pos), rows already dead under the
-        manifest's deletion vectors EXCLUDED — the shared front half of
-        every merge-on-read DML path. Columns carry PHYSICAL names."""
-        fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-        scan = (
-            self.spark.read.schema(self._physical_schema(m))
-            .parquet(*[self._entry_full(rel) for rel in rels])
-            .withColumn("__dv_file", fname)
-            .withColumn("__dv_pos", F.col("_metadata.row_index"))
-        )
-        # initial column defaults: the raw scan must read pre-alter
-        # files' rows under the fill, or a predicate DELETE/UPDATE on a
-        # defaulted column would silently miss them (same rule as
-        # _read_files)
-        inits = {
-            c: d
-            for c, d in m.get("defaults", {}).items()
-            if d.get("initial") is not None
-        }
-        if inits:
-            from pyspark.sql.types import StructType as _ST
-
-            types = {
-                f.name: f.dataType
-                for f in _ST.fromJson(json.loads(m["schema"])).fields
-            }
-            for c, d in inits.items():
-                pre = self._pre_default_basenames(d)
-                if not pre:
-                    continue
-                phys = self._phys(m, c)
-                scan = scan.withColumn(
-                    phys,
-                    F.when(
-                        F.col("__dv_file").isin(sorted(pre)),
-                        F.lit(d["initial"]).cast(types[c]),
-                    ).otherwise(F.col(phys)),
-                )
-        dvs = m.get("dvs", {})
-        already = sorted({dv for rel in rels for dv in dvs.get(rel, [])})
-        if already:
-            dead0 = (
-                self.spark.read.parquet(
-                    *[os.path.join(self.path, d) for d in already]
-                )
-                .select(
-                    F.col("data_file").alias("__dv_file"),
-                    F.col("pos").alias("__dv_pos"),
-                )
-                .distinct()
-            )
-            scan = scan.join(dead0, ["__dv_file", "__dv_pos"], "left_anti")
-        return scan
 
     def delete(self, where=None, mode: str = "cow") -> int:
         """Predicate DELETE — Delta's ``DELETE FROM t [WHERE ...]``.
@@ -5292,7 +5179,7 @@ class SnapshotTable:
                     where, col_of=lambda c: self._phys(m, c)
                 )
                 hits = (
-                    self._dv_scan(m, straddle_rels)
+                    self._scan(m, straddle_rels, tag=True)
                     .where(F.coalesce(pred, F.lit(False)))
                     .select(
                         F.col("__dv_file").alias("data_file"),
@@ -5338,9 +5225,7 @@ class SnapshotTable:
         if straddle_rels:
             pred = self._pred_expr(where)
             remaining = (
-                self._read_files(
-                    [self._entry_full(r) for r in straddle_rels], m
-                )
+                self._read_files(straddle_rels, m)
                 .where(~F.coalesce(pred, F.lit(False)))
                 .withColumn("__bucket", self._bucket_expr(m))
             )
@@ -5468,7 +5353,7 @@ class SnapshotTable:
         if mode == "dv":
             pred = self._pred_expr(where, col_of=lambda c: self._phys(m, c))
             matched = (
-                self._dv_scan(m, affected_rels)
+                self._scan(m, affected_rels, tag=True)
                 .where(F.coalesce(pred, F.lit(False)))
                 .persist()
             )
@@ -5525,9 +5410,7 @@ class SnapshotTable:
         # carried verbatim, matched rows replaced by their post-image;
         # __bucket recomputed AFTER generated recompute, so key/partition
         # updates route rows to their new buckets and directories
-        src = self._read_files(
-            [self._entry_full(r) for r in affected_rels], m
-        )
+        src = self._read_files(affected_rels, m)
         pred = F.coalesce(self._pred_expr(where), F.lit(False))
         out = (
             post_image(src.where(pred))
@@ -5678,9 +5561,7 @@ class SnapshotTable:
         if not targets:
             return base
         old_rels = [rel for b in targets for rel in m["files"][b]]
-        rows = self._read_files(
-            [self._entry_full(r) for r in old_rels], m
-        ).withColumn("__bucket", self._bucket_expr(m))
+        rows = self._read_files(old_rels, m).withColumn("__bucket", self._bucket_expr(m))
         if zorder_by is None:
             new_files, new_stats = self._write_bucket_files(rows, m)
         else:
@@ -5769,11 +5650,7 @@ class SnapshotTable:
             # vectors are the slice's OWN (dv_m=m): a DV-only commit must
             # surface exactly the newly-dead rows as deletes.
             return self._read_files(
-                [
-                    os.path.join(self.path, rel)
-                    for b in changed
-                    for rel in m["files"].get(b, [])
-                ],
+                [rel for b in changed for rel in m["files"].get(b, [])],
                 mt,
                 dv_m=m,
             )
@@ -6037,7 +5914,7 @@ class SnapshotTable:
         new_hw = None
         release = lambda: None  # noqa: E731
         if old_rels:
-            target = self._read_files([self._entry_full(r) for r in old_rels], m)
+            target = self._read_files(old_rels, m)
             keep = target.join(touched, key, "left_anti")
             if ident_col is not None:
                 # Delta's identity-under-MERGE rule, mirrored from

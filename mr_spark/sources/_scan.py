@@ -8,8 +8,8 @@ diverge:
 * only the needed physical columns are DECODED (``columns=`` pushdown
   into pyarrow — a dropped column's bytes are never decompressed);
 * a logical column whose physical name is absent from the file (written
-  before a schema evolution) NULL-fills, matching acid._read_files'
-  manifest-schema scan;
+  before a schema evolution) NULL-fills, matching the manifest-schema
+  scan of ``SnapshotTable._scan`` (mr_spark/acid.py);
 * parquet row order IS the ``_metadata.row_index`` order, so deletion
   vectors apply as positional filters.
 """
@@ -21,7 +21,8 @@ import os
 
 def dead_positions(file_path: str, dv_paths: list[str]) -> set[int]:
     """Row positions of ``file_path`` killed by its deletion vectors —
-    the pyarrow restatement of acid._read_files' row_index anti-join."""
+    the pyarrow restatement of ``SnapshotTable._scan``'s row_index
+    anti-join."""
     import pyarrow.parquet as pq
 
     base = os.path.basename(file_path)

@@ -8,8 +8,8 @@ This closes the acid.py module docstring's remaining driver-cost note:
 shape instead: predicates prune files from the manifest alone DURING
 PLANNING (partition-value equality on value-partitioned tables, footer
 [min, max] ranges for range predicates, per-file bloom probes for point
-predicates on indexed columns — the same ladder as
-``SnapshotTable.data_paths``), and only the surviving files become input
+predicates on indexed columns — ``SnapshotTable._plan_files``, the file
+plan ``data_paths`` uses), and only the surviving files become input
 partitions. Executors read them under the MANIFEST schema (evolved
 columns NULL-fill for old files), apply deletion vectors by row
 position, and re-apply the predicates EXACTLY row-level (vectorized
@@ -240,6 +240,32 @@ def _pack_file_specs(
     return parts
 
 
+def _file_specs(t, m: dict, rels: list[str]) -> list[tuple]:
+    """Per-file split specs ``(file_path, dv_paths, fills)`` for the
+    manifest entries ``rels`` of ``m``: each file's deletion vectors and
+    the initial column defaults (add_column) its rows read, because the
+    file predates the alter — one rule for the batch reader and the
+    table-as-stream snapshot batch."""
+    dvs = m.get("dvs", {})
+    init_pre = {
+        c: (t._pre_default_basenames(d), d["initial"])
+        for c, d in m.get("defaults", {}).items()
+        if d.get("initial") is not None
+    }
+    return [
+        (
+            t._entry_full(rel),
+            [t._entry_full(d) for d in dvs.get(rel, [])],
+            {
+                c: v
+                for c, (pre, v) in init_pre.items()
+                if os.path.basename(rel) in pre
+            },
+        )
+        for rel in rels
+    ]
+
+
 def parse_where(expr: str) -> list[list[tuple]]:
     """``option("where", ...)`` -> normalized conjuncts (the shared
     grammar in mr_spark/predicates.py): the six comparators, BETWEEN,
@@ -269,76 +295,11 @@ class SnapshotReader(DataSourceReader):
 
     # ---- planning (driver): manifest-only pruning ---------------------
 
-    def _keep_file(
-        self,
-        fstats: dict,
-        bloom_cols: tuple,
-        cmap: dict,
-        pval: str | None = None,
-        pcol: str | None = None,
-        time_cols: dict | None = None,
-    ) -> bool:
-        """Skip a file only on PROOF of disjointness with some conjunct
-        — the same verdict ladder as acid's data_paths (ranges, IN, OR
-        groups, null tests, bloom point probes, exact partition
-        values, time-typed constant widening), via the shared
-        predicates module."""
-        from ..acid import _bloom_might_contain
-        from ..predicates import conjunct_verdict
-
-        return not any(
-            conjunct_verdict(
-                atoms,
-                fstats,
-                phys_of=lambda c: cmap.get(c, c),
-                pval=pval,
-                pcol=pcol,
-                bloom_phys=set(bloom_cols),
-                bloom_might_contain=_bloom_might_contain,
-                time_cols=time_cols,
-            )
-            == "disjoint"
-            for atoms in self._preds
-        )
-
     def partitions(self) -> Sequence[InputPartition]:
-        from ..acid import _part_of
-
         t = _table(self.path)
         m = t._manifest(
             self.version if self.version is not None else t.latest_version()
         )
-        stats = m.get("stats", {})
-        dvs = m.get("dvs", {})
-        cmap = m.get("colmap", {})
-        # PARTITION PRUNING first (value-partitioned tables): an
-        # equality conjunct on the partition column eliminates whole
-        # partitions from the BUCKET MAP — O(buckets) string compares
-        # before the O(files) stats ladder, and it works even for files
-        # without stats. Advisory like everything here: the executor
-        # re-applies every predicate exactly row-level.
-        # after partition-spec evolution each bucket prunes under ITS
-        # OWN spec (mixed layouts coexist; transforms answer range
-        # shapes) — the same helper the native read path plans with
-        from ..acid import SnapshotTable as _ST
-        from ..acid import _spec_identity
-
-        buckets = _ST._prune_bucket_map(m, self._preds)
-        # predicates arrive under LOGICAL names; stats and blooms are
-        # keyed by the PHYSICAL in-file names (column mapping) —
-        # _keep_file maps through a phys_of callable on a LOCAL basis,
-        # so a replanned reader can never double-apply the colmap
-        bloom_cols = tuple(
-            cmap.get(c, c) for c in m.get("bloom_cols", ())
-        )
-        time_cols = t._time_cols_phys(m)
-        # initial column defaults (add_column): files predating the
-        # alter fill the recorded value executor-side
-        init_pre = {
-            c: (t._pre_default_basenames(d), d["initial"])
-            for c, d in m.get("defaults", {}).items()
-            if d.get("initial") is not None
-        }
         # row tracking: executors project the EFFECTIVE schema, so the
         # hidden _row_id column is never even decoded; a predicate on
         # it while hidden is a contradiction, refused loudly
@@ -350,35 +311,13 @@ class SnapshotReader(DataSourceReader):
                 "where references the hidden '_row_id' column — pass "
                 "option('with_row_ids', 'true') to expose row ids"
             )
-        specs: list[tuple] = []
-        for b, rels in buckets.items():
-            spec = _ST._bucket_spec(m, b)
-            # exact pval claims are identity-only (a transformed value
-            # is a range statement, applied at the bucket map above)
-            pcol = spec["column"] if _spec_identity(spec) else None
-            pval = _part_of(b) if pcol else None
-            for rel in rels:
-                if not self._keep_file(
-                    stats.get(rel, {}), bloom_cols, cmap, pval, pcol,
-                    time_cols,
-                ):
-                    continue
-                base = os.path.basename(rel)
-                fills = {
-                    c: v
-                    for c, (pre, v) in init_pre.items()
-                    if base in pre
-                }
-                specs.append(
-                    (
-                        os.path.join(self.path, rel),
-                        [
-                            os.path.join(self.path, d)
-                            for d in dvs.get(rel, [])
-                        ],
-                        fills,
-                    )
-                )
+        # the native read's own file plan (partition pruning per bucket
+        # spec, then the per-file verdict ladder), so both read the same
+        # files. Advisory like everything here: the executor re-applies
+        # every predicate exactly row-level.
+        rels = [rel for _, rel, _ in t._plan_files(m, self._preds)]
+        cmap = m.get("colmap", {})
+        specs = _file_specs(t, m, rels)
         parts = _pack_file_specs(specs, eff_json, cmap, self._preds)
         # an empty table still needs >= 1 partition
         return parts or [_FileSetPartition([], eff_json, cmap)]
@@ -489,32 +428,16 @@ class SnapshotStreamReader(DataSourceStreamReader):
     # ---- planning (driver): manifest metadata, no data read -----------
 
     def _snapshot_parts(self, m: dict) -> list[InputPartition]:
-        dvs = m.get("dvs", {})
-        t = _table(self.path)
-        # initial column defaults: the snapshot batch serves pre-alter
-        # files with the recorded fill, same as the batch source (the
-        # per-commit REPLAY path never needs fills — pre-alter commits
-        # carry a pre-alter schema and fail the pinned-schema check)
-        init_pre = {
-            c: (t._pre_default_basenames(d), d["initial"])
-            for c, d in m.get("defaults", {}).items()
-            if d.get("initial") is not None
-        }
-        eff_json = _effective_schema(m, self._options).json()
-        specs = [
-            (
-                os.path.join(self.path, rel),
-                [os.path.join(self.path, d) for d in dvs.get(rel, [])],
-                {
-                    c: v
-                    for c, (pre, v) in init_pre.items()
-                    if os.path.basename(rel) in pre
-                },
-            )
-            for rels in m["files"].values()
-            for rel in rels
-        ]
-        return _pack_file_specs(specs, eff_json, m.get("colmap", {}), None)
+        # the per-commit REPLAY path never needs DVs or fills: an
+        # append-only commit's new files carry none, and pre-alter
+        # commits carry a pre-alter schema and fail the pinned-schema check
+        rels = [rel for rels in m["files"].values() for rel in rels]
+        return _pack_file_specs(
+            _file_specs(_table(self.path), m, rels),
+            _effective_schema(m, self._options).json(),
+            m.get("colmap", {}),
+            None,
+        )
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         t = _table(self.path)

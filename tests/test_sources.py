@@ -463,6 +463,91 @@ def test_snapshot_batch_source_bloom_point_lookup(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_snapshot_source_plans_the_native_file_set(spark, tmp_path):
+    """format("snapshot") plans its splits from the same file plan as
+    the native read and predicate DML: on a partitioned, spec-evolved,
+    bloom-indexed table with a timestamp column and a deletion vector,
+    the reader's split files equal data_paths(), which equal
+    _classify_files' full ∪ straddle — and the source returns exactly
+    the native read's rows."""
+    import datetime as dt
+    import functools
+
+    from pyspark.sql import DataFrame
+
+    from mr_spark.acid import SnapshotTable
+    from mr_spark.predicates import parse_sql_where
+    from mr_spark.sources.snapshot_source import SnapshotReader, register
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [
+                (
+                    i,
+                    f"d{i % 3}",
+                    f"g{i % 2}",
+                    dt.datetime(2024, 1, 1 + i % 5, i % 24),
+                    None if i % 7 == 0 else f"v{i}",
+                )
+                for i in range(lo, hi)
+            ],
+            "k bigint, day string, grp string, ts timestamp, v string",
+        )
+
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "plan"), rows(0, 24), key="k", n_buckets=2,
+        partition_by="day", bloom_cols=["v"],
+    )
+    t.set_partition_spec("grp")
+    t.append(rows(24, 40))
+    t.delete_keys(spark.createDataFrame([(5,), (30,)], "k bigint"), mode="dv")
+    m = t._manifest(t.latest_version())
+    assert m["dvs"] and len(m["partition_specs"]) == 2
+    n_all = sum(len(rels) for rels in m["files"].values())
+    register(spark)
+    pruned, src, native_rows = 0, [], []
+    for i, w in enumerate(
+        (
+            "day = 'd1' AND k BETWEEN 3 AND 33",
+            "v IN ('v8', 'v31', 'v8a')",
+            "(k < 4 OR grp = 'g1')",
+            "v IS NULL",
+            "ts >= '2024-01-04 12:00:00'",
+        )
+    ):
+        preds = parse_sql_where(w)
+        planned = {
+            f
+            for p in SnapshotReader({"path": t.path, "where": w}).partitions()
+            for f in p.file_paths
+        }
+        native = set(t.data_paths(where=preds))
+        full, straddle = t._classify_files(m, preds)
+        classified = {
+            t._entry_full(rel)
+            for d in (full, straddle)
+            for rels in d.values()
+            for rel in rels
+        }
+        assert planned == native == classified, w
+        pruned += len(native) < n_all
+        # rows of every predicate, tagged by its index: one job per side
+        src.append(
+            spark.read.format("snapshot")
+            .option("path", t.path)
+            .option("where", w)
+            .load()
+            .select(F.lit(i).alias("w"), "*")
+        )
+        native_rows.append(t.read(where=preds).select(F.lit(i).alias("w"), "*"))
+    got, exp = (
+        sorted(map(tuple, functools.reduce(DataFrame.unionByName, dfs).collect()))
+        for dfs in (src, native_rows)
+    )
+    assert got == exp and {r[0] for r in exp} == set(range(5))
+    assert pruned >= 3  # the plans really prune, not keep everything
+
+
 def test_spark_pushfilters_readinfo_cache_engine_canary(spark, tmp_path):
     """ENGINE CANARY, not a feature test: pins the Spark 4.1.2 behavior
     that forced manifest pruning onto option("where") instead of
