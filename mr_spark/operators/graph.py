@@ -41,7 +41,7 @@ def _driver_union_find(spark: SparkSession, edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(rows, schema="doc_id bigint, component bigint")
 
 
-_COMP_CTES = """
+_COMP_CTES = r"""
     pairs AS (
       SELECT doc_a, doc_b FROM (
         WITH toks AS (

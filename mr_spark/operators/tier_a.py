@@ -1,10 +1,11 @@
 """Tier A engine runs surfaced as driver-harness queries.
 
-These execute the FAITHFUL RDD MapReduce engine (mr_spark.engine) over the
-documents table and expose its string-typed ``(k, v)`` output as a
-DataFrame — so the reference's own execution semantics (engine sort,
-sorted-values-into-reduce, hash partitioning) are validated by the DuckDB
-oracle too, not only by the differential tests.
+These run the Tier A apps through the engine's Arrow-batched executor
+(``run_on_documents_batched``) over the documents table and return its
+string-typed ``(k, v)`` output as a DataFrame — so the engine's execution
+semantics (engine sort, sorted-values-into-reduce, hash co-location of
+keys) are validated by the DuckDB oracle too, not only by the differential
+tests, which pin the batched executor to the faithful RDD engine.
 """
 
 from __future__ import annotations
@@ -31,10 +32,10 @@ _TOKENS_SQL = (
 )
 def tier_a_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count through the Tier A engine (Python App, Arrow-batched
-    executor, n_reduce=10). Output is the engine's text model: both columns
-    string. The batched executor is pinned record-for-record to the
-    faithful RDD engine by test_engine_differential, so the oracle here
-    transitively validates both."""
+    executor, AQE-sized reduce side). Output is the engine's text model:
+    both columns string. The batched executor is pinned record-for-record
+    to the faithful RDD engine by test_engine_differential, so the oracle
+    here transitively validates both."""
     return run_on_documents_batched(spark, sf_dir, get_app("wc"))
 
 

@@ -43,6 +43,18 @@ def test_output_independent_of_partition_count(spark, corpus, app_name):
     assert five == ten
 
 
+# AQE coalesces the batched executor's reduce side to one partition at
+# sf0.001; the second input pins seven uncoalesced reduce partitions so a
+# multi-partition reduce stays covered.
+_BATCHED_CONFS = [
+    {},
+    {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "7",
+    },
+]
+
+
 @pytest.mark.parametrize("app_name", APP_NAMES)
 def test_batched_executor_matches_rdd_engine(spark, app_name):
     """The Arrow-batched executor (mapInPandas plumbing) is semantically
@@ -53,11 +65,22 @@ def test_batched_executor_matches_rdd_engine(spark, app_name):
 
     app = get_app(app_name)
     rdd_out = sorted(run_on_documents(spark, SF_DIR, app, n_reduce=10).collect())
-    batched = sorted(
-        (r["k"], r["v"])
-        for r in run_on_documents_batched(spark, SF_DIR, app, n_reduce=10).collect()
-    )
-    assert batched == rdd_out
+    for conf in _BATCHED_CONFS:
+        saved = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            batched = sorted(
+                (r["k"], r["v"])
+                for r in run_on_documents_batched(spark, SF_DIR, app).collect()
+            )
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert batched == rdd_out, conf
 
 
 def test_indexer_postings_sorted(spark, corpus):

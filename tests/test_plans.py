@@ -425,3 +425,16 @@ def test_identity_allocation_no_single_partition_exchange(spark):
         assert "rangepartitioning" in p.lower()
     finally:
         release()
+
+
+def test_tier_a_reduce_side_is_aqe_coalesced(spark):
+    """The batched executor's shuffle is a by-column repartition, so AQE
+    sizes the reduce side from the shuffle bytes: a fixed-count
+    repartition (REPARTITION_BY_NUM) is never coalesced and costs one
+    Python reduce task per bucket however few rows there are."""
+    df = QUERIES["tier_a_wc"](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan
+    assert "AQEShuffleRead coalesced" in plan
